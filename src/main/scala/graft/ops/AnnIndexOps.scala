@@ -1,10 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.QueryDef
+import graft.functions.{FrozenCentroids, FrozenCodebooks, L2SquaredDistance, PqEncode, QuantizerFunctions}
 import graft.util.Tables._
 
 /** ANN index BUILD/SERVE split (VERDICT r12 #1): the production FAISS
@@ -57,9 +62,9 @@ object AnnIndexOps {
     * (cell, n_vectors, max_vec_id) folded additively on append,
     * subtracted on takedown, swapped on split — and the census becomes
     * an O(nlist) read at any corpus size. `max_vec_id` rides along as
-    * the id high-watermark the streamed maintain's idempotency probe
+    * the id high-watermark the streamed maintain's idempotency gate
     * needs (VERDICT r16 #4): ids above the stored maximum are fresh by
-    * construction and skip the full-column anti-join outright.
+    * construction and skip the anti-join against the stored ids.
     */
   def cellPopsTable(prefix: String): String = s"${prefix}_cellpops"
 
@@ -97,14 +102,14 @@ object AnnIndexOps {
     * freshness watermark. LIVE, not historical: [[takedownIndex]]
     * recomputes the census from survivors, so deleting the highest-id
     * vectors lowers it, and a batch redelivered after a takedown
-    * re-appends its deleted ids (resurrection) — exactly what the old
-    * full anti-join did (an absent id is indistinguishable from a
-    * never-seen one); deletion-under-streaming is the tombstone tier's
-    * job (q356), not this watermark's. Unlike
-    * [[TakedownOps.pinMaxDocId]]'s HISTORICAL doctrine for the doc
-    * tiers, whose append contract (strictly-above ids) must reject
-    * reused ids forever. None when the side relation is absent or empty
-    * (callers fall back to the full anti-join).
+    * re-appends its deleted ids (resurrection) — exactly what the full
+    * anti-join does (an absent id is indistinguishable from a never-seen
+    * one); deletion-under-streaming is the tombstone tier's job (q356),
+    * not this watermark's. Unlike [[TakedownOps.pinMaxDocId]]'s
+    * HISTORICAL doctrine for the doc tiers, whose append contract
+    * (strictly-above ids) must reject reused ids forever. None when the
+    * side relation is absent or empty (callers fall back to the full
+    * anti-join).
     */
   def maxIndexedId(spark: SparkSession, prefix: String): Option[Long] =
     if (spark.catalog.tableExists(cellPopsTable(prefix))) {
@@ -113,25 +118,67 @@ object AnnIndexOps {
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     } else None
 
-  /** Run independent actions concurrently from a bounded pool (guide
-    * §2.6 — overlap independent jobs): the index maintenance paths
-    * commit several mutually-independent table writes whose sequential
-    * submission left the cluster idle between commits. Rethrows the
-    * first failure.
+  /** The daemon threads [[inParallel]] runs on, shared by every call.
+    * Cached, not fixed: each call bounds its own concurrency, a nested
+    * call never waits for a thread its caller holds, and idle threads
+    * exit after a minute.
     */
-  private[ops] def inParallel(work: Seq[() => Unit]): Unit =
-    if (work.size <= 1) work.foreach(_())
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, work.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = work.map(w => scala.concurrent.Future(w()))
-        futs.foreach(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
+  private lazy val pool = java.util.concurrent.Executors.newCachedThreadPool {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    r: Runnable => {
+      val t = new Thread(r, s"graft-parallel-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
     }
+  }
+
+  /** Run independent actions concurrently (guide §2.6 — overlap
+    * independent jobs): the index maintenance paths commit several
+    * mutually-independent table writes whose sequential submission left
+    * the cluster idle between commits. Each task runs with the caller's
+    * session, local properties (job group, description, SQL execution)
+    * and artifact state, as Spark's own broadcast threads do: a pooled
+    * thread would otherwise keep those of the call that created it.
+    * At most `width` tasks of one call run at once. Every task finishes
+    * before this returns or throws, an interrupt of the caller included
+    * (it is re-asserted on return): the first failure (in `work` order)
+    * is rethrown with the others attached as suppressed, so no sibling
+    * write is still running when the caller sees the error.
+    */
+  private[graft] def inParallel[T](spark: SparkSession, work: Seq[() => T],
+      width: Int = 4): Seq[T] =
+    if (work.size <= 1) work.map(_())
+    else {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val slots = new java.util.concurrent.Semaphore(width)
+      val futs = work.map { w =>
+        slots.acquireUninterruptibly()
+        SQLExecution.withThreadLocalCaptured(session, pool) {
+          try w() finally slots.release()
+        }
+      }
+      val done = futs.map(outcome)
+      done.collect { case Left(e) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => done.collect { case Right(r) => r }
+      }
+    }
+
+  /** A task's result or failure, waited for through interrupts. */
+  private def outcome[T](f: java.util.concurrent.Future[T]): Either[Throwable, T] = {
+    var r: Either[Throwable, T] = null
+    var interrupted = false
+    while (r == null)
+      try r = Right(f.get())
+      catch {
+        case e: java.util.concurrent.ExecutionException => r = Left(e.getCause)
+        case _: InterruptedException => interrupted = true
+      }
+    if (interrupted) Thread.currentThread().interrupt()
+    r
+  }
 
   /** DROP + location delete before Overwrite — Overwrite can't reclaim a
     * location the (fresh in-memory) catalog never registered; the same
@@ -145,60 +192,63 @@ object AnnIndexOps {
       .delete(loc, true)
   }
 
-  /** The residual-quantizing encode shared by build (whole corpus) and
-    * append (new batch): assign each vector to its nearest FIXED
-    * centroid, quantize the residual x − centroid against the FIXED
-    * codebooks. Returns (codes (vec_id, sub, code, cell),
-    * vectors (vec_id, v, cell)).
+  /** The frozen coarse quantizer and PQ codebooks, read to the driver
+    * in one job for the fused kernels: ≤ nlist + m·k rows, the broadcast
+    * sides of the joins the kernels replace.
     */
-  private[ops] def encodeAgainst(vecs: DataFrame, centroids: DataFrame,
-      books: DataFrame, m: Int, dim: Int): (DataFrame, DataFrame) = {
-    val assigned = SimilarityOps.nearestCells(
-      vecs.select(col("vec_id"), col("v")), "vec_id", "v", centroids, 1)
-    encodeAssigned(vecs, assigned, centroids, books, m, dim)
+  private[ops] def frozenQuantizers(centroids: DataFrame, books: DataFrame,
+      m: Int): (FrozenCentroids, FrozenCodebooks) = {
+    val rows = centroids.select(lit(-1).as("sub"), col("cell").as("code"), col("cv"))
+      .unionByName(books.select(col("sub"), col("code"), col("cv")))
+      .collect().toSeq
+    val (cents, codes) = rows.partition(_.getInt(0) < 0)
+    (FrozenCentroids.of(cents.map(r => Row(r.getInt(1), r.get(2)))),
+      FrozenCodebooks.of(codes, m))
   }
 
-  /** The encode with the cell assignment ALREADY decided — split out of
-    * [[encodeAgainst]] (its only caller) to keep the LUT-consistency
-    * contract in one place: `assigned` carries (vec_id, v, cell), and a
-    * vector's code is always the quantization of v − centroid(its
-    * recorded cell), so the serve's ADC lookup table is built against
-    * the same centroid the code was taken against. Note the fat-cell
-    * split does NOT bypass the argmax: its residual-L2 sub-fit only
-    * PLACES the child centroids, then deliberately re-derives
-    * membership through [[encodeAgainst]]'s cosine argmax — the same
-    * metric the serve's probe selection uses (see the doctrine note in
-    * splitOnce; a residual-L2 membership measurably lost served twins).
+  private[ops] def frozenQuantizers(spark: SparkSession, prefix: String,
+      m: Int): (FrozenCentroids, FrozenCodebooks) = {
+    val tn = tables(prefix)
+    frozenQuantizers(spark.table(tn.centroids), spark.table(tn.codebooks), m)
+  }
+
+  /** The residual-quantizing encode shared by append, rebuild and split:
+    * assign each vector to its nearest FIXED centroid (cosine argmax),
+    * quantize the residual x − centroid against the FIXED codebooks —
+    * one narrow projection through the native argmax-cell and PQ encode
+    * kernels, no join and no shuffle. A vector's code is always the
+    * quantization of v − centroid(its recorded cell), so the serve's ADC
+    * lookup table is built against the same centroid the code was taken
+    * against. Note the fat-cell split does NOT bypass the argmax: its
+    * residual-L2 sub-fit only PLACES the child centroids, then
+    * deliberately re-derives membership here — the same metric the
+    * serve's probe selection uses (see the doctrine note in splitOnce; a
+    * residual-L2 membership measurably lost served twins).
+    *
+    * Metadata rides IN the index (the filtered-search tier, q339): a
+    * label column on both codes and vectors lets a serve-side filter
+    * PRE-filter candidates at the scan. Absent label -> constant 0.
+    * Returns (codes (vec_id, sub, code, cell, label),
+    * vectors (vec_id, v, cell, label)). Both are recomputed by each
+    * consumer (a map-only projection), so `vecs` must not read a table
+    * the caller appends them to.
     */
-  private def encodeAssigned(vecs: DataFrame, assigned: DataFrame,
-      centroids: DataFrame, books: DataFrame, m: Int,
+  private[ops] def encodeAgainst(vecs: DataFrame,
+      quantizers: (FrozenCentroids, FrozenCodebooks), m: Int,
       dim: Int): (DataFrame, DataFrame) = {
-    // eager checkpoint: both returned frames (codes AND vectors) are
-    // written by separate actions downstream, and without the cut each
-    // write re-runs the whole assign+residual lineage — the encode ran
-    // TWICE per append/rebuild (guide §1.2: don't compute things twice)
-    val resid = assigned.join(broadcast(centroids), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("v"),
-        expr("zip_with(v, cv, (p, q) -> p - q)").as("rv"))
-      .localCheckpoint(true)
-    val codes = SimilarityOps.assignCodes(
-        SimilarityOps.subVectors(
-          resid.select(col("vec_id"), col("rv").as("v")),
-          "vec_id", "v", m, dim / m),
-        books)
-      .select(col("vec_id"), col("sub"), col("code"))
-      .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    // metadata rides IN the index (the filtered-search tier, q339): a
-    // label column on both codes and vectors lets a serve-side filter
-    // PRE-filter candidates at the scan, never post-filtering a
-    // shortlist it already under-filled. Absent label -> constant 0.
+    val (cents, books) = quantizers
     val lbl =
-      if (vecs.columns.contains("label"))
-        vecs.select(col("vec_id"), col("label").cast("int").as("label"))
-      else vecs.select(col("vec_id"), lit(0).as("label"))
-    (codes.join(lbl, Seq("vec_id")),
-      resid.select(col("vec_id"), col("v"), col("cell"))
-        .join(lbl, Seq("vec_id")))
+      if (vecs.columns.contains("label")) col("label").cast("int")
+      else lit(0)
+    val enc = SimilarityOps.nearestCells(
+        vecs.select(col("vec_id"), col("v"), lbl.as("label")), "vec_id", "v",
+        cents, 1)
+      .withColumn("codes", QuantizerFunctions.pqEncode(col("v"), col("cell"),
+        cents, books, dim / m))
+    (enc.select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")),
+        col("cell"), col("label"))
+      .where(col("code").isNotNull),
+      enc.select(col("vec_id"), col("v"), col("cell"), col("label")))
   }
 
   /** Per-process BUILD MEMO (VERDICT r13 #5): six graded queries each
@@ -308,7 +358,7 @@ object AnnIndexOps {
     // (source census missing — spec fixtures) must wait for the cloned
     // vectors table.
     val srcPopsExists = spark.catalog.tableExists(cellPopsTable(from))
-    inParallel(Seq(
+    inParallel(spark, Seq(
       () => spark.table(src.centroids).write.mode(SaveMode.Overwrite)
         .format("parquet").saveAsTable(dst.centroids),
       () => spark.table(src.codebooks).write.mode(SaveMode.Overwrite)
@@ -377,11 +427,11 @@ object AnnIndexOps {
       .localCheckpoint()
     val assigned = SimilarityOps.nearestCells(
         corpus.select(col("vec_id"), col("v")), "vec_id", "v", centroids, 1)
-      .localCheckpoint() // consumed by resid + the vectors table write
+      .localCheckpoint() // consumed by resid + the census
     val resid = assigned.join(broadcast(centroids), Seq("cell"))
       .select(col("vec_id"), col("cell"),
         expr("zip_with(v, cv, (p, q) -> p - q)").as("v"))
-      .localCheckpoint() // consumed by every Lloyd round + the encode
+      .localCheckpoint() // consumed by every Lloyd round
     val books = SimilarityOps.pqCodebooks(
       resid.select(col("vec_id"), col("v")), m, k, iters, dim)
     (Seq(tn.centroids, tn.codebooks, tn.codes, tn.vectors) :+
@@ -391,19 +441,11 @@ object AnnIndexOps {
       .saveAsTable(tn.centroids)
     books.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(tn.codebooks)
-    val lbl =
-      if (corpus.columns.contains("label"))
-        corpus.select(col("vec_id"), col("label").cast("int").as("label"))
-      else corpus.select(col("vec_id"), lit(0).as("label"))
-    val codes = SimilarityOps.assignCodes(
-        SimilarityOps.subVectors(resid.select(col("vec_id"), col("v")),
-          "vec_id", "v", m, dim / m),
-        spark.table(tn.codebooks))
-      .select(col("vec_id"), col("sub"), col("code"))
-      .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .join(lbl, Seq("vec_id"))
-    val vecs = assigned.select(col("vec_id"), col("v"), col("cell"))
-      .join(lbl, Seq("vec_id"))
+    // the corpus is encoded by the append's own kernels against the
+    // quantizers as stored, so a built vector and the same vector
+    // appended get the same cell and codes (q326/q351's byte identity)
+    val (codes, vecs) = encodeAgainst(corpus,
+      frozenQuantizers(spark, prefix, m), m, dim)
     // repartition on the BUCKET key with the bucket count (the q103
     // layout recipe): each task owns one bucket across all cell
     // directories -> cells x buckets files, no small-file explosion
@@ -427,14 +469,18 @@ object AnnIndexOps {
     * tables (bucket spec preserved). Centroids and codebooks are never
     * touched: appending is O(batch), and the price is drift — fat cells
     * when the new data shifts — which [[indexCellCensus]] watches.
+    * The append is one narrow projection of `batch` (the fused
+    * argmax-cell and PQ encode kernels over the quantizers read once)
+    * plus its three writes; `batch` must not read this index's tables
+    * (the streamed maintenance passes its checkpointed gate output).
     */
   def appendToIndex(spark: SparkSession, batch: DataFrame, prefix: String,
       m: Int = 8, dim: Int = 64, buckets: Int = 4): Unit = {
     val tn = tables(prefix)
-    val (codes, vecs) = encodeAgainst(batch, spark.table(tn.centroids),
-      spark.table(tn.codebooks), m, dim)
-    // the three appends are mutually independent (different tables; the
-    // shared resid frame is checkpointed inside the encode) — run them
+    val (codes, vecs) = encodeAgainst(batch,
+      frozenQuantizers(spark, prefix, m), m, dim)
+    // the three appends are mutually independent (different tables; each
+    // recomputes the batch's narrow encode projection) — run them
     // concurrently instead of idling between commits (guide §2.6).
     // The census lands as per-batch DELTA rows — a pure append of
     // ≤ nlist rows. The r17 shape read the stored relation, merged, and
@@ -446,7 +492,7 @@ object AnnIndexOps {
     // semantically invisible; full rewrites (build, takedown, split)
     // still land compacted snapshots via [[writePops]].
     val popsTbl = cellPopsTable(prefix)
-    inParallel(Seq(
+    inParallel(spark, Seq(
       () => codes.repartition(buckets, col("vec_id"))
         .write.mode(SaveMode.Append)
         .partitionBy("cell").bucketBy(buckets, "vec_id").sortBy("vec_id")
@@ -532,7 +578,7 @@ object AnnIndexOps {
     // the codes and vectors rewrites are independent; each one's
     // snapshot→reset→overwrite chain runs on its own thread so the two
     // table commits overlap (guide §2.6)
-    inParallel(Seq(tn.codes, tn.vectors).map(tbl => () => {
+    inParallel(spark, Seq(tn.codes, tn.vectors).map(tbl => () => {
       val snap = spark.table(tbl).join(del, Seq("vec_id"), "left_anti")
         .localCheckpoint(true)
       reset(spark, tbl)
@@ -617,10 +663,11 @@ object AnnIndexOps {
     Seq(dst.centroids, dst.codebooks, dst.codes, dst.vectors,
         tombstoneTable(toPrefix), cellPopsTable(toPrefix))
       .foreach(reset(spark, _))
-    val (codes, vecs) = encodeAgainst(survivors, cent, books, m, dim)
-    // five independent table writes (the shared resid is checkpointed
-    // inside the encode) — overlap the commits (guide §2.6)
-    inParallel(Seq(
+    val (codes, vecs) = encodeAgainst(survivors,
+      frozenQuantizers(cent, books, m), m, dim)
+    // five independent table writes (the encode is a narrow projection
+    // each write recomputes) — overlap the commits (guide §2.6)
+    inParallel(spark, Seq(
       () => cent.write.mode(SaveMode.Overwrite).format("parquet")
         .saveAsTable(dst.centroids),
       () => books.write.mode(SaveMode.Overwrite).format("parquet")
@@ -874,50 +921,39 @@ object AnnIndexOps {
     // arithmetic is untouched (same idBase, same seeded fits), so
     // results are byte-identical; only the job submission overlaps.
     // Results are collected in the original cell order.
-    val repaired = {
-      val parallelism = math.min(8, fatWithBase.size)
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(parallelism)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = fatWithBase.map { case (c, s, idBase) =>
-          scala.concurrent.Future {
-            spark.sparkContext.setJobDescription(s"splitOnce: cell $c")
-            val cellVecs = spark.table(tn.vectors).where(col("cell") === c)
-              .select(col("vec_id"), col("v"), col("label"))
-              .localCheckpoint(true)
-            // The sub-fit runs in RESIDUAL space under L2, not original
-            // space under cosine: a drift pile is a tight lobe whose
-            // members' raw cosines to any candidate sub-centroid are all
-            // ≈ 1 (measured: a cosine Lloyd left 1501 of 1530 lobe
-            // members on one child), while the residuals v − parent
-            // carry exactly the within-cell structure — the IVFADC
-            // premise — and separate cleanly. The residual fit only
-            // PLACES the child centroids (each = its residual-cluster's
-            // original-space decimal mean); final membership comes from
-            // [[encodeAgainst]]'s cosine argmax over those children —
-            // the SAME metric the serve's probe selection uses, so a
-            // query sitting on a member's position always probes that
-            // member's child first (a residual-L2 membership measurably
-            // lost served twins whose child ranked below the probe cut
-            // in cosine).
-            val children0 = fitResidualChildren(spark, cellVecs,
-              tn.centroids, c, s, iters, idBase)
-            val (codes, vecs) = encodeAgainst(cellVecs, children0, books,
-              m, dim)
-            // cosine re-assignment can empty a child; an empty cell's
-            // centroid would still attract probe slots and read nothing
-            // — prune it
-            val children = children0.join(
-              vecs.select(col("cell")).distinct(), Seq("cell"), "left_semi")
-            (children, codes, vecs)
-          }
-        }
-        futs.map(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    }
+    val repaired = inParallel(spark, fatWithBase.map { case (c, s, idBase) =>
+      () => {
+        spark.sparkContext.setJobDescription(s"splitOnce: cell $c")
+        val cellVecs = spark.table(tn.vectors).where(col("cell") === c)
+          .select(col("vec_id"), col("v"), col("label"))
+          .localCheckpoint(true)
+        // The sub-fit runs in RESIDUAL space under L2, not original
+        // space under cosine: a drift pile is a tight lobe whose
+        // members' raw cosines to any candidate sub-centroid are all
+        // ≈ 1 (measured: a cosine Lloyd left 1501 of 1530 lobe
+        // members on one child), while the residuals v − parent
+        // carry exactly the within-cell structure — the IVFADC
+        // premise — and separate cleanly. The residual fit only
+        // PLACES the child centroids (each = its residual-cluster's
+        // original-space decimal mean); final membership comes from
+        // [[encodeAgainst]]'s cosine argmax over those children —
+        // the SAME metric the serve's probe selection uses, so a
+        // query sitting on a member's position always probes that
+        // member's child first (a residual-L2 membership measurably
+        // lost served twins whose child ranked below the probe cut
+        // in cosine).
+        val children0 = fitResidualChildren(spark, cellVecs,
+          tn.centroids, c, s, iters, idBase)
+        val (codes, vecs) = encodeAgainst(cellVecs,
+          frozenQuantizers(children0, books, m), m, dim)
+        // cosine re-assignment can empty a child; an empty cell's
+        // centroid would still attract probe slots and read nothing
+        // — prune it
+        val children = children0.join(
+          vecs.select(col("cell")).distinct(), Seq("cell"), "left_semi")
+        (children, codes, vecs)
+      }
+    }, width = 8)
     // swap parent rows for child rows SURGICALLY: the children append
     // as NEW cell partitions (the appendToIndex write shape — the
     // table's own partition/bucket spec governs the layout), then the
@@ -946,40 +982,28 @@ object AnnIndexOps {
       .reduce(_.unionByName(_)).localCheckpoint(true)
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     // the three table rewrites are mutually independent (different
-    // tables; every input frame is already checkpointed), so they run
+    // tables; every input frame reads checkpointed rows), so they run
     // concurrently (guide §2.6) — each was a sequential shuffle-write +
     // commit + directory-drop chain before
-    locally {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val centsF = scala.concurrent.Future {
-          reset(spark, tn.centroids)
-          newCents.write.mode(SaveMode.Overwrite).format("parquet")
-            .saveAsTable(tn.centroids)
-        }
-        val tblFs = Seq((tn.codes, repaired.map(_._2)),
-            (tn.vectors, repaired.map(_._3))).map { case (tbl, parts) =>
-          scala.concurrent.Future {
-            val cols = spark.table(tbl).columns
-            parts.map(_.select(cols.map(col): _*))
-              .reduce(_.unionByName(_))
-              .repartition(buckets, col("vec_id"))
-              .write.mode(SaveMode.Append)
-              .partitionBy("cell").bucketBy(buckets, "vec_id").sortBy("vec_id")
-              .format("parquet").saveAsTable(tbl)
-            val loc = new org.apache.hadoop.fs.Path(wh, tbl)
-            val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            fatCells.foreach(c =>
-              fs.delete(new org.apache.hadoop.fs.Path(loc, s"cell=$c"), true))
-            spark.catalog.refreshTable(tbl)
-          }
-        }
-        (centsF +: tblFs).foreach(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    }
+    inParallel(spark, (() => {
+        reset(spark, tn.centroids)
+        newCents.write.mode(SaveMode.Overwrite).format("parquet")
+          .saveAsTable(tn.centroids)
+      }) +: Seq((tn.codes, repaired.map(_._2)),
+          (tn.vectors, repaired.map(_._3))).map { case (tbl, parts) => () => {
+        val cols = spark.table(tbl).columns
+        parts.map(_.select(cols.map(col): _*))
+          .reduce(_.unionByName(_))
+          .repartition(buckets, col("vec_id"))
+          .write.mode(SaveMode.Append)
+          .partitionBy("cell").bucketBy(buckets, "vec_id").sortBy("vec_id")
+          .format("parquet").saveAsTable(tbl)
+        val loc = new org.apache.hadoop.fs.Path(wh, tbl)
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fatCells.foreach(c =>
+          fs.delete(new org.apache.hadoop.fs.Path(loc, s"cell=$c"), true))
+        spark.catalog.refreshTable(tbl)
+      }})
     if (sys.env.contains("SPARK_GRAFT_TD_TIMING"))
       System.err.println(f"[splitOnce] table rewrites: " +
         f"${(System.nanoTime() - tWrites0) / 1e9}%.2fs")
@@ -1082,12 +1106,46 @@ object AnnIndexOps {
     rows.toDF("metric", "unsplit", "split").orderBy("metric")
   }
 
+  /** The ADC lookup table of collected (q_id, qv, probed cells) rows:
+    * (q_id, cell, sub, code, qdist), qdist the squared L2 of the query's
+    * residual against the cell's centroid, sliced to subspace `sub`, to
+    * that subspace's codeword — [[PqEncode]]'s residual and slices and
+    * [[L2SquaredDistance]], so a query and a vector at the same position
+    * see the distances the vector's code was chosen by. ≤ queries ·
+    * probes · m · k rows, built on the driver: the broadcast side of the
+    * ADC join.
+    */
+  private[ops] def adcLut(spark: SparkSession, qRows: Seq[Row], qId: StructField,
+      cents: FrozenCentroids, books: FrozenCodebooks, subDim: Int): DataFrame = {
+    val schema = StructType(Seq(qId,
+      StructField("cell", IntegerType), StructField("sub", IntegerType),
+      StructField("code", IntegerType), StructField("qdist", DoubleType)))
+    spark.createDataFrame(qRows.flatMap { r =>
+      val qv = FrozenCentroids.vector(r, 1)
+      r.getSeq[Int](2).flatMap { cell =>
+        val rv = PqEncode.residual(qv, cents.of(cell))
+        (0 until books.m).flatMap { sub =>
+          val qsv = if (rv == null) null else PqEncode.subvector(rv, sub, subDim)
+          books.codes(sub).indices.map { j =>
+            val cv = books.vecs(sub)(j)
+            Row(r.get(0), cell, sub, books.codes(sub)(j),
+              if (qsv == null || cv == null) null
+              else L2SquaredDistance.compute(qsv, cv))
+          }
+        }
+      }
+    }.asJava, schema)
+  }
+
   /** SERVE: answer top-k from the STORED index with NO refit — the
     * milliseconds path of the build/serve split. The plan reads only
-    * index tables: centroids + codebooks broadcast, the codes/vectors
-    * scans partition-pruned to the probed cells (`isin` over the probed
-    * cell list — O(probes·|queries|) ≤ nlist driver-side metadata, the
-    * LayoutOps manifest convention, documented and bounded). Everything
+    * index tables: the codes/vectors scans partition-pruned to the
+    * probed cells (`isin` over the probed cell list — O(probes·|queries|)
+    * ≤ nlist driver-side metadata, the LayoutOps manifest convention,
+    * documented and bounded). The query batch is read ONCE, its probed
+    * cells scored there by the native top-n cells kernel against the
+    * centroids read once; the probed list, the ADC lookup table and the
+    * rerank's broadcast side all come from those rows. Everything
     * downstream is q309's arithmetic verbatim: per-(q, cell) residual
     * LUTs, decimal ADC sums, constant shortlist, exact cosine rerank.
     */
@@ -1097,28 +1155,16 @@ object AnnIndexOps {
     require(shortlist >= topK, s"shortlist $shortlist must cover topK $topK")
     val tn = tables(prefix)
     val subDim = dim / m
-    val centroids = spark.table(tn.centroids)
-    val books = spark.table(tn.codebooks)
-    val queryCells = SimilarityOps.nearestCells(
-      queries, "q_id", "qv", centroids, probes)
+    val (cents, books) = frozenQuantizers(spark, prefix, m)
+    val qSchema = StructType(Seq(queries.schema("q_id"), queries.schema("qv")))
+    val qRows = queries.select(col("q_id"), col("qv"),
+        QuantizerFunctions.topCells(col("qv"), cents, probes))
+      .collect().toSeq
     // probed-cell list: <= nlist ints of driver metadata, never data —
     // literal IN over the partition column is what turns the codes scan
     // into "read only the probed inverted lists" (PartitionFilters)
-    val probed = queryCells.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val qResid = queryCells.join(broadcast(centroids), Seq("cell"))
-      .select(col("q_id"), col("cell"),
-        expr("zip_with(qv, cv, (p, q) -> p - q)").as("qrv"))
-    val lut = qResid
-      .select(col("q_id"), col("cell"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> slice(qrv, s * $subDim + 1, $subDim))"))
-        .as(Seq("sub", "qsv")))
-      .join(books, Seq("sub"))
-      .select(col("q_id"), col("cell"), col("sub"), col("code"),
-        SimilarityOps.l2sq("qsv", "cv").as("qdist"))
-    // codes carry their cell (one cell per vector), so routing is a
-    // map-side broadcast join against the pruned scan — no vec_id
-    // shuffle before the ADC aggregate
+    val probed = qRows.flatMap(_.getSeq[Int](2)).distinct.sorted
+    val lut = adcLut(spark, qRows, qSchema("q_id"), cents, books, subDim)
     // attribute PRE-filter (q339): the label predicate lands on the
     // pruned scans themselves (a pushed parquet data filter next to the
     // cell partition filter), so the ADC stage never scores an
@@ -1135,11 +1181,13 @@ object AnnIndexOps {
     }
     val codes = filt(
       spark.table(tn.codes).where(col("cell").isin(probed: _*)))
+    // codes carry their cell (one cell per vector), so routing to the
+    // queries probing it and the LUT lookup are one map-side broadcast
+    // join against the pruned scan — no vec_id shuffle before the ADC
+    // aggregate
     val adist = codes
-      .join(broadcast(queryCells.select(col("q_id"), col("cell"))),
-        Seq("cell"))
+      .join(broadcast(lut), Seq("cell", "sub", "code"))
       .where(col("vec_id") =!= col("q_id"))
-      .join(broadcast(lut), Seq("q_id", "cell", "sub", "code"))
       .groupBy("q_id", "vec_id")
       .agg(sum(col("qdist").cast("decimal(30,15)")).as("adist"))
     val ws = Window.partitionBy(col("q_id"))
@@ -1156,7 +1204,8 @@ object AnnIndexOps {
       .orderBy(col("sim").desc, col("vec_id").asc)
     short
       .join(vecs, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
+      .join(broadcast(spark.createDataFrame(
+        qRows.map(r => Row(r.get(0), r.get(1))).asJava, qSchema)), Seq("q_id"))
       .withColumn("sim", SimilarityOps.cosine("qv", "v"))
       .withColumn("rnk", row_number().over(wr))
       .where(col("rnk") <= topK)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
+import graft.functions.{FrozenCentroids, FrozenCodebooks, QuantizerFunctions}
 import graft.util.Tables._
 
 /** Similarity search over `embeddings` (64-dim float vectors, SURVEY §7.4):
@@ -232,35 +233,31 @@ object SimilarityOps {
     if (sort) ranked.orderBy("q_id", "rnk") else ranked
   }
 
-  /** n nearest centroid cells per row of `df`, by cosine; argmax
-    * aggregate for n=1, bounded window otherwise.
+  /** n nearest centroid cells per row of `df`, by cosine, nearest first
+    * (ties to the smaller cell). The centroid frame (≤ nlist rows) is read
+    * once, and each row is scored in one narrow projection by the native
+    * argmax-cell (n = 1) or top-n cells kernel: no join of every row
+    * against every centroid and no shuffle. Each row keeps its own
+    * cell: ids are unique (the corpus contract).
     */
   private[ops] def nearestCells(df: DataFrame, idCol: String, vcol: String,
-      centroids: DataFrame, n: Int): DataFrame = {
-      val withSim = df.join(broadcast(centroids))
-        .withColumn("csim", cosine(vcol, "cv"))
-      if (n == 1) {
-        // top-1 as a map-side-combinable argmax aggregate instead of a
-        // window: partial aggregation collapses the (row x cells) fan-out
-        // on the mappers, where the window would shuffle AND sort all of
-        // it — the right cell-assignment shape at any scale. Ordering is
-        // identical to the window's (csim desc, cell asc): ties in csim
-        // break on max(-cell) = min cell, and coalescing a null csim
-        // (null vector) to -Infinity reproduces the window's nulls-last
-        // placement.
-        val carry = df.columns.filterNot(_ == idCol)
-        val ord = struct(
-          coalesce(col("csim"), lit(Double.NegativeInfinity)), -col("cell"))
-        withSim.groupBy(col(idCol))
-          .agg(max_by(struct((carry.map(col) :+ col("cell")): _*), ord).as("best"))
-          .select(col(idCol) +: (carry :+ "cell").map(c => col(s"best.$c").as(c)): _*)
-      } else {
-        val w = Window.partitionBy(col(idCol)).orderBy(col("csim").desc, col("cell"))
-        withSim.withColumn("crnk", row_number().over(w))
-          .where(col("crnk") <= n)
-          .drop("cv", "csim", "crnk")
-      }
-  }
+      centroids: DataFrame, n: Int): DataFrame =
+    nearestCells(df, idCol, vcol, frozenCentroids(centroids), n)
+
+  private[ops] def nearestCells(df: DataFrame, idCol: String, vcol: String,
+      centroids: FrozenCentroids, n: Int): DataFrame =
+    if (n == 1) {
+      val carry = df.columns.filterNot(_ == idCol)
+      df.select((col(idCol) +: carry.map(col)) :+
+          QuantizerFunctions.nearestCell(col(vcol), centroids).as("cell"): _*)
+        .where(col("cell").isNotNull)
+    } else
+      df.select(df.columns.map(col) :+
+        explode(QuantizerFunctions.topCells(col(vcol), centroids, n)).as("cell"): _*)
+
+  /** A (cell, cv) centroid frame read to the driver for the kernels. */
+  private[ops] def frozenCentroids(centroids: DataFrame): FrozenCentroids =
+    FrozenCentroids.of(centroids.select(col("cell"), col("cv")).collect().toSeq)
 
   /** Seed centroids on the first `cells` vectors, refine with `iters`
     * Lloyd rounds; returns the (cell, cv) centroid frame. Each round's
@@ -352,7 +349,7 @@ object SimilarityOps {
     * `probes` nearest cells. The scale path when LSH's data-oblivious
     * buckets waste probes: centroids adapt to the data distribution.
     * All DataFrame ops — centroid recompute is a posexplode + (cell, dim)
-    * mean + rebuild, assignment is a broadcast of the (tiny) centroid set.
+    * mean + rebuild, assignment reads the (tiny) centroid set once.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       cells: Int = 16, probes: Int = 3, iters: Int = 2,
@@ -971,29 +968,28 @@ object SimilarityOps {
     require(shortlist >= topK, s"shortlist $shortlist must cover topK $topK")
     val subDim = 64 / m
     val centroids = fitCentroids(corpus, cells, iters)
+    val cents = frozenCentroids(centroids)
     val corpusCells = nearestCells(corpus.select(col("vec_id"), col("v")),
-      "vec_id", "v", centroids, 1)
-    // row-local residuals against the broadcast centroid frame
+      "vec_id", "v", cents, 1)
+    // row-local residuals against the broadcast centroid frame, for the
+    // codebook fit
     val resid = corpusCells.join(broadcast(centroids), Seq("cell"))
       .select(col("vec_id"), col("cell"),
         expr("zip_with(v, cv, (p, q) -> p - q)").as("v"))
-    val books = pqCodebooks(resid.select(col("vec_id"), col("v")),
-      m, k, iters)
-    val codes = assignCodes(
-      subVectors(resid.select(col("vec_id"), col("v")), "vec_id", "v",
-        m, subDim), books)
-      .select(col("vec_id"), col("sub"), col("code"))
-    val queryCells = nearestCells(queries, "q_id", "qv", centroids, probes)
-    val qResid = queryCells.join(broadcast(centroids), Seq("cell"))
-      .select(col("q_id"), col("cell"),
-        expr("zip_with(qv, cv, (p, q) -> p - q)").as("qrv"))
-    val lut = qResid
-      .select(col("q_id"), col("cell"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> slice(qrv, s * $subDim + 1, $subDim))"))
-        .as(Seq("sub", "qsv")))
-      .join(books, Seq("sub"))
-      .select(col("q_id"), col("cell"), col("sub"), col("code"),
-        l2sq("qsv", "cv").as("qdist"))
+    val books = FrozenCodebooks.of(pqCodebooks(
+        resid.select(col("vec_id"), col("v")), m, k, iters)
+      .select(col("sub"), col("code"), col("cv")).collect().toSeq, m)
+    // the stored index's encode and ADC lookup table (AnnIndexOps), so
+    // the serve of an index built on this corpus answers as this does
+    val codes = corpusCells
+      .select(col("vec_id"), posexplode(QuantizerFunctions.pqEncode(
+        col("v"), col("cell"), cents, books, subDim)).as(Seq("sub", "code")))
+      .where(col("code").isNotNull)
+    val queryCells = nearestCells(queries, "q_id", "qv", cents, probes)
+    val lut = AnnIndexOps.adcLut(corpus.sparkSession,
+      queries.select(col("q_id"), col("qv"),
+        QuantizerFunctions.topCells(col("qv"), cents, probes)).collect().toSeq,
+      queries.schema("q_id"), cents, books, subDim)
     // a vector lives in exactly one cell, so routed pairs are unique
     val routed = corpusCells.select(col("vec_id"), col("cell"))
       .join(broadcast(queryCells.select(col("q_id"), col("cell"))), Seq("cell"))

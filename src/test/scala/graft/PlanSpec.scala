@@ -14,6 +14,24 @@ class PlanSpec extends SparkSpec {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** One query's plans as the two whole-catalog sweeps below read them. */
+  private case class SweptPlan(name: String, executed: String, unpartitionedWindow: Boolean)
+
+  /** Builds every query once for both sweeps. Building a query runs its
+    * eager steps (checkpoints, table writes), so a sweep costs as much as
+    * running the catalog; the two tests share one instead of paying twice.
+    */
+  private lazy val sweep: Seq[SweptPlan] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
+    SparkEntry.all.map { q =>
+      val qe = q.fn(spark, sf).queryExecution
+      val unpart = qe.optimizedPlan.collectWithSubqueries {
+        case w: LogicalWindow if w.partitionSpec.isEmpty => w
+      }
+      SweptPlan(q.name, qe.executedPlan.toString, unpart.nonEmpty)
+    }
+  }
+
   test("q02 scan prunes columns: o_comment-free ReadSchema") {
     // select 6 of 6 columns here, so use a pruned projection directly
     val df = t(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
@@ -99,15 +117,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("no query plans an unbroadcast Cartesian product") {
-    SparkEntry.all.foreach { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"),
-        s"${q.name} plans a CartesianProduct:\n$plan")
+    sweep.foreach { q =>
+      assert(!q.executed.contains("CartesianProduct"),
+        s"${q.name} plans a CartesianProduct:\n${q.executed}")
     }
   }
 
   test("unpartitioned windows appear only over frames bounded by construction") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
     // An unpartitioned window funnels its whole input through ONE task, so
     // it is legal only when the frame is bounded by CONSTRUCTION — an
     // aggregate over a calendar/digit/shard-grid key whose cardinality
@@ -142,13 +158,7 @@ class PlanSpec extends SparkSpec {
       "q327_bpe_budget" -> "q320's <=1001-row density grid frame, re-priced in BPE tokens (rprm <= 1000 since every word is >= 1 BPE token)",
       "q337_zipf_slope" -> "<=256-row top-rank frame: the rank window runs AFTER orderBy().limit(256) (TakeOrdered), bounded by construction",
       "q364_hybrid_retrieval" -> "query-catalog frame: the synthetic q_id ranking runs over one row per DISTINCT retrieval query (3 here; the query set, never the corpus)")
-    val offenders = SparkEntry.all.flatMap { q =>
-      val unpart = q.fn(spark, sf).queryExecution.optimizedPlan
-        .collectWithSubqueries {
-          case w: LogicalWindow if w.partitionSpec.isEmpty => w
-        }
-      if (unpart.nonEmpty) Some(q.name) else None
-    }.toSet
+    val offenders = sweep.filter(_.unpartitionedWindow).map(_.name).toSet
     assert(offenders == allowed.keySet,
       s"unpartitioned-window set drifted.\n  unexpected: ${(offenders -- allowed.keySet).toSeq.sorted}\n  stale allowlist: ${(allowed.keySet -- offenders).toSeq.sorted}")
   }
