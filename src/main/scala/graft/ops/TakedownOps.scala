@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -251,6 +251,34 @@ object TakedownOps {
     pinned
   }
 
+  /** [[tableMaxDocId]] of a relation a materialize path wrote: those
+    * paths always pin it (Long.MinValue for an empty relation), so a
+    * missing pin means a table this code did not write, and the
+    * watermark cannot be trusted. */
+  private[graft] def pinnedMaxDocId(spark: SparkSession, tbl: String): Long =
+    tableMaxDocId(spark, tbl).getOrElse(throw new IllegalStateException(
+      s"$tbl has no graft.maxDocId property: it was not materialized by " +
+        "this code; rebuild it"))
+
+  private def maxOrMin(r: Row): Long =
+    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+
+  /** The ids of `ids` (a `doc_id` frame rooted on `spark`) still present
+    * in the pb-partitioned relation `tbl`, materialized and re-rooted on
+    * `spark`, with their count: the probe reads only the batch ids' pb
+    * partitions (driver metadata bounded by the bucket count), never the
+    * whole relation. The streamed takedowns' idempotency gate: a
+    * redelivered batch drains to nothing here. */
+  private[graft] def presentIds(spark: SparkSession, ids: DataFrame,
+      tbl: String): (DataFrame, Long) = {
+    val t = spark.table(tbl)
+    require(t.columns.contains("pb"), s"$tbl has no pb partition column: " +
+      "it was not materialized by this code; rebuild it")
+    val pbs = bucketsOf(ids, "doc_id", tableDocBuckets(spark, tbl))
+    GraftBridge.checkpointOn(spark,
+      ids.join(t.where(col("pb").isin(pbs: _*)), Seq("doc_id"), "left_semi"))
+  }
+
   /** Row-identical set equality (multiplicity-aware, order-free).
     * Equal counts + one empty bag-difference imply equality, so the
     * second exceptAll pass is replaced by a cheap count.
@@ -386,8 +414,8 @@ object TakedownOps {
         col("par_toks"), col("dup"))
     saveTable(withPb(parsV, "doc_id", b), tn.pars, Seq("pb"))
     pinDocBuckets(spark, tn.pars, b)
-    val mx = spark.table(tn.pars).agg(max(col("pid"))).head()
-    if (!mx.isNullAt(0)) pinMaxDocId(spark, tn.pars, mx.getLong(0))
+    pinMaxDocId(spark, tn.pars,
+      maxOrMin(spark.table(tn.pars).agg(max(col("pid"))).head()))
     saveTable(
       withPart(curatedFromPars(spark.table(tn.pars), docs),
         col("doc_id"), b, "cb"),
@@ -639,8 +667,7 @@ object TakedownOps {
     saveTable(withPb(labelsToClusters(docs, labels), "doc_id", b),
       tn.clusters, Seq("pb"))
     pinDocBuckets(spark, tn.clusters, b)
-    val mx = docs.agg(max(col("doc_id"))).head()
-    if (!mx.isNullAt(0)) pinMaxDocId(spark, tn.clusters, mx.getLong(0))
+    pinMaxDocId(spark, tn.clusters, maxOrMin(docs.agg(max(col("doc_id"))).head()))
     tn
   }
 
@@ -889,8 +916,7 @@ object TakedownOps {
     // maintenance paths rewrite only affected directories
     saveTable(withPb(mediaKeyed(docs), "doc_id", b), tn.keyed, Seq("pb"))
     pinDocBuckets(spark, tn.keyed, b)
-    val mx = docs.agg(max(col("doc_id"))).head()
-    if (!mx.isNullAt(0)) pinMaxDocId(spark, tn.keyed, mx.getLong(0))
+    pinMaxDocId(spark, tn.keyed, maxOrMin(docs.agg(max(col("doc_id"))).head()))
     saveTable(withPart(mediaSigs(spark, spark.table(tn.keyed)),
       col("media_key"), b, "sb"), tn.sigs, Seq("sb"))
     pinDocBuckets(spark, tn.sigs, b)

@@ -80,12 +80,9 @@ object StreamingAnnMaintain {
         val (landed, n, nSeen) = GraftBridge.checkpointOn(spark, batch, seen)
         val (fresh, nFresh) =
           if (nSeen == 0) (landed, n)
-          else {
-            val (rows, k, _) = GraftBridge.checkpointOn(spark,
-              landed.join(spark.table(tn.vectors).select(col("vec_id")),
-                Seq("vec_id"), "left_anti"), lit(false))
-            (rows, k)
-          }
+          else GraftBridge.checkpointOn(spark,
+            landed.join(spark.table(tn.vectors).select(col("vec_id")),
+              Seq("vec_id"), "left_anti"))
         if (nFresh > 0) {
           AnnIndexOps.appendToIndex(spark, fresh, indexPrefix,
             m = m, dim = dim, buckets = buckets)

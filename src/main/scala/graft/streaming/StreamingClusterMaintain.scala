@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -41,17 +41,15 @@ object StreamingClusterMaintain {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tn = TakedownOps.clusterTables(prefix)
-        // watermark from the pinned table property when present (O(1)
-        // catalog metadata); the id-column scan is only the fallback
-        // for maps materialized before the property existed
-        val wm = TakedownOps.tableMaxDocId(spark, tn.clusters)
-          .getOrElse {
-            val wmRow = spark.table(tn.clusters)
-              .agg(max(col("doc_id"))).head()
-            if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-          }
-        val fresh = batch.where(col("doc_id") > wm).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+        // watermark from the pinned table property (O(1) catalog
+        // metadata). The gate is the only work on the stream's session:
+        // one job materializes and counts the fresh rows and re-roots
+        // them on the caller's session, whose code-generation cache the
+        // merge's plans then hit
+        val wm = TakedownOps.pinnedMaxDocId(spark, tn.clusters)
+        val (fresh, n) =
+          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+        if (n > 0) {
           TakedownOps.appendToClusters(spark, fresh, prefix)
           // cloned-session relation-cache refresh (the q351 lesson)
           spark.catalog.refreshTable(tn.clusters)

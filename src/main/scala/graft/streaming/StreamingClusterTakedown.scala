@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -48,27 +48,13 @@ object StreamingClusterTakedown {
         val tn = TakedownOps.clusterTables(prefix)
         // idempotency gate: only ids still PRESENT in the stored map
         // need work — a redelivered batch drains to nothing here. The
-        // probe prunes to the batch ids' pb partitions (driver metadata
-        // bounded by the table's bucket count), so the per-trigger read
-        // is batch-bucket-bounded instead of a full-relation scan
-        val ids = batch.select(col("doc_id")).localCheckpoint(true)
-        // a map materialized by pre-partitioning code has no pb column;
-        // fall back to the unpruned semi-join instead of throwing
-        // (ADVICE r17)
-        val clustersT = spark.table(tn.clusters)
-        val pruned =
-          if (!clustersT.columns.contains("pb")) clustersT
-          else {
-            val b = TakedownOps.tableDocBuckets(spark, tn.clusters)
-            val pbs = ids.select(pmod(col("doc_id"), lit(b.toLong))
-                .cast("int").as("pb"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            clustersT.where(col("pb").isin(pbs: _*))
-          }
-        val present = ids
-          .join(pruned, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        if (!present.isEmpty) {
+        // batch ids are materialized once and re-rooted on the caller's
+        // session, so the bucket-pruned probe and the repair compile
+        // against its code-generation cache, not the stream's
+        val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
+        val (present, nPresent) =
+          if (n == 0) (ids, 0L) else TakedownOps.presentIds(spark, ids, tn.clusters)
+        if (nPresent > 0) {
           TakedownOps.takedownClusters(spark, present, prefix)
           // cloned-session relation-cache refresh (the q351 lesson)
           spark.catalog.refreshTable(tn.clusters)

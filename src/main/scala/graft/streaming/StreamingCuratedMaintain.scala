@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -26,10 +26,10 @@ import graft.ops.TakedownOps
   * doc_id HIGH-WATERMARK the exact dedup key: rows at or below the
   * stored maximum have already been processed, so each micro-batch
   * drops them first and a fully-redelivered batch is a no-op. The
-  * watermark reads the pars table (one max over a pruned column;
-  * docs that left no paragraphs reassemble to nothing and re-gate to
-  * a no-op, so missing them from the watermark is harmless — pinned
-  * by StreamingCuratedMaintainSpec's wiped-checkpoint re-run).
+  * watermark is the pars table's pinned max pid (docs that left no
+  * paragraphs reassemble to nothing and re-gate to a no-op, so missing
+  * them from the watermark is harmless — pinned by
+  * StreamingCuratedMaintainSpec's wiped-checkpoint re-run).
   */
 object StreamingCuratedMaintain {
 
@@ -48,19 +48,15 @@ object StreamingCuratedMaintain {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tn = TakedownOps.curatedTables(prefix)
         // watermark from the pinned max-pid property (O(1) catalog
-        // metadata); the id-column scan is only the pre-property
-        // fallback. pid >> 20 recovers the owning doc_id.
-        val wm = TakedownOps.tableMaxDocId(spark, tn.pars)
-          .map(_ >> 20)
-          .getOrElse {
-            val wmRow = spark.table(tn.pars)
-              .agg(max(shiftright(col("pid"), 20))).head()
-            if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-          }
-        // eager checkpoint: the fresh slice is consumed several times
-        // inside the append (contract min, banding, verdicts, writes)
-        val fresh = batch.where(col("doc_id") > wm).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+        // metadata); pid >> 20 recovers the owning doc_id
+        val wm = TakedownOps.pinnedMaxDocId(spark, tn.pars) >> 20
+        // materialized once (the fresh slice is consumed several times
+        // inside the append: contract min, banding, verdicts, writes) and
+        // re-rooted on the caller's session, so the append's plans hit
+        // its code-generation cache instead of recompiling per stream
+        val (fresh, n) =
+          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+        if (n > 0) {
           TakedownOps.appendToCurated(spark, fresh, prefix)
           // the micro-batch runs on the stream's CLONED session, whose
           // catalog invalidation does not reach the outer session's

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -80,8 +80,11 @@ object StreamingLmMaintain {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val wm = watermark(spark, prefix)
-        val fresh = batch.where(col("doc_id") > wm).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+        // one job materializes the fresh rows and re-roots them on the
+        // caller's session (see StreamingClusterMaintain)
+        val (fresh, n) =
+          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+        if (n > 0) {
           VocabModelOps.learnLm(spark, fresh, prefix)
           val newWm = fresh.agg(max(col("doc_id")).as("max_doc_id"))
             .localCheckpoint(true)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -65,11 +65,13 @@ object StreamingLmUnlearn {
         // that doc twice; rows are (doc_id, text) so duplicates are
         // identical and any one representative is exact
         val deduped = batch.dropDuplicates("doc_id")
-        val fresh =
-          (if (spark.catalog.tableExists(pt))
+        // one job materializes the unprocessed rows and re-roots them on
+        // the caller's session (see StreamingClusterMaintain)
+        val (fresh, n) = GraftBridge.checkpointOn(spark,
+          if (spark.catalog.tableExists(pt))
             deduped.join(spark.table(pt), Seq("doc_id"), "left_anti")
-          else deduped).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+          else deduped)
+        if (n > 0) {
           VocabModelOps.unlearnLm(spark, fresh, prefix)
           fresh.select(col("doc_id")).write.mode(SaveMode.Append)
             .format("parquet").saveAsTable(pt)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -45,16 +45,13 @@ object StreamingMediaMaintain {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tn = TakedownOps.mediaTables(prefix)
-        // watermark from the pinned table property when present (O(1)
-        // catalog metadata); the id-column scan is only the fallback
-        val wm = TakedownOps.tableMaxDocId(spark, tn.keyed)
-          .getOrElse {
-            val wmRow = spark.table(tn.keyed)
-              .agg(max(col("doc_id"))).head()
-            if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-          }
-        val fresh = batch.where(col("doc_id") > wm).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+        // watermark from the pinned table property (O(1) catalog
+        // metadata); one job materializes the fresh rows and re-roots
+        // them on the caller's session (see StreamingClusterMaintain)
+        val wm = TakedownOps.pinnedMaxDocId(spark, tn.keyed)
+        val (fresh, n) =
+          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+        if (n > 0) {
           TakedownOps.appendToMedia(spark, fresh, prefix)
           // cloned-session relation-cache refresh (the q351 lesson):
           // the next batch's watermark read and the post-stream

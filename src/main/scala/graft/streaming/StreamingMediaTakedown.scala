@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -42,26 +42,12 @@ object StreamingMediaTakedown {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val tn = TakedownOps.mediaTables(prefix)
-        // idempotency probe pruned to the batch ids' pb partitions —
-        // batch-bucket-bounded, never a full ownership-relation scan
-        val ids = batch.select(col("doc_id")).localCheckpoint(true)
-        // an ownership relation materialized by pre-partitioning code
-        // has no pb column; fall back to the unpruned semi-join instead
-        // of throwing (ADVICE r17)
-        val keyedT = spark.table(tn.keyed)
-        val pruned =
-          if (!keyedT.columns.contains("pb")) keyedT
-          else {
-            val b = TakedownOps.tableDocBuckets(spark, tn.keyed)
-            val pbs = ids.select(pmod(col("doc_id"), lit(b.toLong))
-                .cast("int").as("pb"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            keyedT.where(col("pb").isin(pbs: _*))
-          }
-        val present = ids
-          .join(pruned, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        if (!present.isEmpty) {
+        // idempotency probe pruned to the batch ids' pb partitions, on
+        // the caller's session (see StreamingClusterTakedown)
+        val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
+        val (present, nPresent) =
+          if (n == 0) (ids, 0L) else TakedownOps.presentIds(spark, ids, tn.keyed)
+        if (nPresent > 0) {
           TakedownOps.takedownMedia(spark, present, prefix)
           Seq(tn.keyed, tn.sigs, tn.clusters)
             .foreach(spark.catalog.refreshTable)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -44,8 +44,11 @@ object StreamingSearchIndexMaintain {
         val tn = CorpusStatsOps.searchIndexTables(prefix)
         val wmRow = spark.table(tn.dl).agg(max(col("doc_id"))).head()
         val wm = if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-        val fresh = batch.where(col("doc_id") > wm).localCheckpoint(true)
-        if (!fresh.isEmpty) {
+        // one job materializes the fresh rows and re-roots them on the
+        // caller's session (see StreamingClusterMaintain)
+        val (fresh, n) =
+          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+        if (n > 0) {
           CorpusStatsOps.searchIndexAppend(spark, fresh, prefix)
           // cloned-session relation-cache refresh (the q351 lesson)
           spark.catalog.refreshTable(tn.postings)

@@ -51,4 +51,10 @@ object GraftBridge {
         rdd.copy()(session, Some(rdd.computeStats()), Some(rdd.constraints)))
       .drop("__graft_flag"), n, nFlagged)
   }
+
+  /** [[checkpointOn]] without a flag: the re-rooted rows and their count. */
+  def checkpointOn(target: SparkSession, df: DataFrame): (DataFrame, Long) = {
+    val (rows, n, _) = checkpointOn(target, df, functions.lit(false))
+    (rows, n)
+  }
 }

@@ -6,14 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.{AnnIndexOps, SimilarityOps}
-import graft.plans.WindowGuard
 import graft.streaming.StreamingAnnMaintain
 
 /** What one streamed ANN maintenance operation costs the driver: Spark
@@ -24,39 +20,9 @@ import graft.streaming.StreamingAnnMaintain
   * on every call) fails here before it shows in a benchmark. Also pins
   * [[AnnIndexOps.inParallel]]'s failure contract.
   */
-class AnnMaintainBudgetSpec extends SparkSpec {
+class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
 
   private val schema = StructType.fromDDL("vec_id BIGINT, label INT, v ARRAY<DOUBLE>")
-
-  /** Jobs started while `body` runs; the listener bus is drained before
-    * and after, as WindowGuard does between queries. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    WindowGuard.drain(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { body; WindowGuard.drain(spark); n.get }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  /** Physical plans of the SQL executions started while `body` runs. */
-  private def plansOf(body: => Unit): Seq[String] = {
-    val plans = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    WindowGuard.drain(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { body; WindowGuard.drain(spark); plans.asScala.toSeq }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  private def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("a 20-vector micro-batch and a serve stay within their job budgets; a second call compiles almost nothing") {
     val v = SimilarityOps.vectors(spark, sf)
@@ -89,10 +55,10 @@ class AnnMaintainBudgetSpec extends SparkSpec {
     assert(maintainJobs <= 12, s"one micro-batch ran $maintainJobs Spark jobs")
     assert(serveJobs <= 9, s"one serve collect ran $serveJobs Spark jobs")
     // a call planned on the stream's cloned session recompiles its whole
-    // write path, ~100 classes; the gate alone recompiles a handful, and
-    // evictions from the 100-entry codegen cache add more (10-30
-    // measured)
-    assert(compiled <= 40,
+    // write path, ~100 classes; the gate alone recompiles a handful (7
+    // measured; 10-30 when the codegen cache held only 100 entries and
+    // evicted the write path's classes between calls)
+    assert(compiled <= 20,
       s"a second maintain call compiled $compiled classes: per-call codegen is back")
   }
 

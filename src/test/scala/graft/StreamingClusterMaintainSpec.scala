@@ -56,4 +56,22 @@ class StreamingClusterMaintainSpec extends SparkSpec {
     assert(spark.table(tn.dbuckets).count() === bucketRows,
       "redelivered batches must not duplicate bucket rows")
   }
+
+  test("a map without the pinned watermark fails the stream instead of scanning") {
+    import spark.implicits._
+    val tn = TakedownOps.clusterTables("graft_clmlegacy")
+    spark.sql(s"DROP TABLE IF EXISTS ${tn.clusters}")
+    Seq((1L, 1L, 0)).toDF("doc_id", "cluster_id", "is_dup")
+      .write.format("parquet").saveAsTable(tn.clusters)
+    val landing = Files.createTempDirectory("graft-clmlegacy-landing").toString
+    Seq((2L, "a b c")).toDF("doc_id", "text").write.mode("append").parquet(landing)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingClusterMaintain.maintainAvailableNow(spark, landing, "graft_clmlegacy",
+        Files.createTempDirectory("graft-clmlegacy-ckpt").toString,
+        StructType.fromDDL("doc_id BIGINT, text STRING")).awaitTermination(120000)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("no graft.maxDocId property")), e)
+    assert(spark.table(tn.clusters).count() === 1, "the legacy map must be left as it was")
+  }
 }

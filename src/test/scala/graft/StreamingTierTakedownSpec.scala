@@ -112,4 +112,22 @@ class StreamingTierTakedownSpec extends SparkSpec {
       dataFiles(tn.clusters)) === filesBefore,
       "a redelivered deletion batch must trigger no table rewrite at all")
   }
+
+  test("a map without the pb partition column fails the stream instead of scanning it whole") {
+    import spark.implicits._
+    val tn = TakedownOps.clusterTables("graft_ctdlegacy")
+    spark.sql(s"DROP TABLE IF EXISTS ${tn.clusters}")
+    Seq((1L, 1L, 0)).toDF("doc_id", "cluster_id", "is_dup")
+      .write.format("parquet").saveAsTable(tn.clusters)
+    val landing = Files.createTempDirectory("graft-ctdlegacy-landing").toString
+    Seq(1L).toDF("doc_id").write.mode("append").parquet(landing)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingClusterTakedown.takedownAvailableNow(spark, landing, "graft_ctdlegacy",
+        Files.createTempDirectory("graft-ctdlegacy-ckpt").toString,
+        StructType.fromDDL("doc_id BIGINT")).awaitTermination(120000)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("no pb partition column")), e)
+    assert(spark.table(tn.clusters).count() === 1, "the legacy map must be left as it was")
+  }
 }
