@@ -76,7 +76,7 @@ object AnnIndexOps {
   private def writePops(spark: SparkSession, prefix: String,
       pops: DataFrame): Unit = {
     val snap = pops.localCheckpoint(true)
-    reset(spark, cellPopsTable(prefix))
+    dropTable(spark, cellPopsTable(prefix))
     snap.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(cellPopsTable(prefix))
   }
@@ -178,18 +178,6 @@ object AnnIndexOps {
       }
     if (interrupted) Thread.currentThread().interrupt()
     r
-  }
-
-  /** DROP + location delete before Overwrite — Overwrite can't reclaim a
-    * location the (fresh in-memory) catalog never registered; the same
-    * reset as q42/q55/q62.
-    */
-  private def reset(spark: SparkSession, tbl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
   }
 
   /** The frozen coarse quantizer and PQ codebooks, read to the driver
@@ -352,7 +340,7 @@ object AnnIndexOps {
     // silently filter the fresh serve
     Seq(dst.centroids, dst.codebooks, dst.codes, dst.vectors,
         tombstoneTable(to), cellPopsTable(to))
-      .foreach(reset(spark, _))
+      .foreach(dropTable(spark, _))
     // the five copies are independent reads of distinct source tables —
     // overlap their write commits (guide §2.6). Only the rare fallback
     // (source census missing — spec fixtures) must wait for the cloned
@@ -436,7 +424,7 @@ object AnnIndexOps {
       resid.select(col("vec_id"), col("v")), m, k, iters, dim)
     (Seq(tn.centroids, tn.codebooks, tn.codes, tn.vectors) :+
       cellPopsTable(prefix))
-      .foreach(reset(spark, _))
+      .foreach(dropTable(spark, _))
     centroids.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(tn.centroids)
     books.write.mode(SaveMode.Overwrite).format("parquet")
@@ -525,7 +513,7 @@ object AnnIndexOps {
     val tn = tables(prefix)
     Seq(tn.codes, tn.vectors).foreach { tbl =>
       val snap = spark.table(tbl).localCheckpoint(true)
-      reset(spark, tbl)
+      dropTable(spark, tbl)
       snap.repartition(buckets, col("vec_id"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("cell").bucketBy(buckets, "vec_id").sortBy("vec_id")
@@ -581,7 +569,7 @@ object AnnIndexOps {
     inParallel(spark, Seq(tn.codes, tn.vectors).map(tbl => () => {
       val snap = spark.table(tbl).join(del, Seq("vec_id"), "left_anti")
         .localCheckpoint(true)
-      reset(spark, tbl)
+      dropTable(spark, tbl)
       snap.repartition(buckets, col("vec_id"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("cell").bucketBy(buckets, "vec_id").sortBy("vec_id")
@@ -639,7 +627,7 @@ object AnnIndexOps {
       // snapshot rewrite — the no-op contract is on the ids, not on
       // the table's existence
       if (!ids.isEmpty) takedownIndex(spark, prefix, ids, buckets)
-      reset(spark, tombstoneTable(prefix))
+      dropTable(spark, tombstoneTable(prefix))
     }
 
   /** The takedown-equivalence witness: a second index under `toPrefix`
@@ -662,7 +650,7 @@ object AnnIndexOps {
     // cloneIndex hazard, same fix)
     Seq(dst.centroids, dst.codebooks, dst.codes, dst.vectors,
         tombstoneTable(toPrefix), cellPopsTable(toPrefix))
-      .foreach(reset(spark, _))
+      .foreach(dropTable(spark, _))
     val (codes, vecs) = encodeAgainst(survivors,
       frozenQuantizers(cent, books, m), m, dim)
     // five independent table writes (the encode is a narrow projection
@@ -861,27 +849,18 @@ object AnnIndexOps {
   def splitFatCells(spark: SparkSession, prefix: String,
       fanout: Option[Int] = None, iters: Int = 2, m: Int = 8,
       dim: Int = 64, buckets: Int = 4, maxRounds: Int = 8): Seq[Int] = {
-    def timed(round: Int): Seq[Int] = {
-      val t0 = System.nanoTime()
-      val r = splitOnce(spark, prefix, fanout, iters, m, dim, buckets)
-      if (sys.env.contains("SPARK_GRAFT_TD_TIMING"))
-        System.err.println(f"[splitFatCells] round $round: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs, " +
-          s"split ${r.size} cells (${r.mkString(",")})")
-      r
-    }
+    def once(): Seq[Int] = splitOnce(spark, prefix, fanout, iters, m, dim, buckets)
     var all = Seq.empty[Int]
     var round = 0
-    var last = timed(round)
+    var last = once()
     while (last.nonEmpty && { all ++= last; round += 1; round < maxRounds })
-      last = timed(round)
+      last = once()
     all
   }
 
   private def splitOnce(spark: SparkSession, prefix: String,
       fanout: Option[Int], iters: Int, m: Int,
       dim: Int, buckets: Int): Seq[Int] = {
-    val tRound0 = System.nanoTime()
     val tn = tables(prefix)
     val census = indexCellCensus(spark, prefix).collect()
     val mean = census.map(_.getLong(1)).sum.toDouble / census.length
@@ -972,10 +951,6 @@ object AnnIndexOps {
     // the repair re-runs — the same non-transactional bound every
     // reset+overwrite here has, documented rather than hidden.
     val fatCells = fat.map(_._1)
-    if (sys.env.contains("SPARK_GRAFT_TD_TIMING"))
-      System.err.println(f"[splitOnce] fits (${fat.size} cells): " +
-        f"${(System.nanoTime() - tRound0) / 1e9}%.2fs")
-    val tWrites0 = System.nanoTime()
     val keptCents = spark.table(tn.centroids)
       .where(!col("cell").isin(fatCells: _*))
     val newCents = (keptCents +: repaired.map(_._1))
@@ -986,7 +961,7 @@ object AnnIndexOps {
     // concurrently (guide §2.6) — each was a sequential shuffle-write +
     // commit + directory-drop chain before
     inParallel(spark, (() => {
-        reset(spark, tn.centroids)
+        dropTable(spark, tn.centroids)
         newCents.write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(tn.centroids)
       }) +: Seq((tn.codes, repaired.map(_._2)),
@@ -1004,9 +979,6 @@ object AnnIndexOps {
           fs.delete(new org.apache.hadoop.fs.Path(loc, s"cell=$c"), true))
         spark.catalog.refreshTable(tbl)
       }})
-    if (sys.env.contains("SPARK_GRAFT_TD_TIMING"))
-      System.err.println(f"[splitOnce] table rewrites: " +
-        f"${(System.nanoTime() - tWrites0) / 1e9}%.2fs")
     // census swap, O(split cells): the parents' rows leave, the
     // children's counts come from the just-appended child partitions
     // (cell ids ≥ firstChildId — a partition-pruned read, never the

@@ -826,15 +826,6 @@ object CorpusStatsOps {
   def searchIndexTables(prefix: String): SearchIndexTables =
     SearchIndexTables(s"${prefix}_postings", s"${prefix}_dl")
 
-  private def idxReset(spark: org.apache.spark.sql.SparkSession,
-      tbl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
-  }
-
   private def idxTokens(docs: DataFrame): DataFrame =
     docs.where(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -853,7 +844,7 @@ object CorpusStatsOps {
     // set from an earlier life of this prefix would silently filter a
     // fresh index's serves (the resetWatermark hazard, q378's tier)
     Seq(tn.postings, tn.dl, searchTombTable(prefix))
-      .foreach(idxReset(spark, _))
+      .foreach(dropTable(spark, _))
     post.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(tn.postings)
     dl.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -907,7 +898,7 @@ object CorpusStatsOps {
     Seq(tn.postings, tn.dl).foreach { tbl =>
       val snap = spark.table(tbl).join(del, Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
-      idxReset(spark, tbl)
+      dropTable(spark, tbl)
       snap.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .format("parquet").saveAsTable(tbl)
     }
@@ -941,11 +932,9 @@ object CorpusStatsOps {
         del.join(spark.table(tt), Seq("doc_id"), "left_anti")
           .localCheckpoint(true)
       else del
-    if (!fresh.isEmpty) {
+    if (!fresh.isEmpty)
       fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
         .format("parquet").saveAsTable(tt)
-      spark.catalog.refreshTable(tt)
-    }
   }
 
   /** Fold the pending tombstones into one physical rewrite (the q369
@@ -959,7 +948,7 @@ object CorpusStatsOps {
     if (!spark.catalog.tableExists(tt)) return
     val pending = spark.table(tt).localCheckpoint(true)
     searchIndexTakedown(spark, pending, prefix)
-    idxReset(spark, tt)
+    dropTable(spark, tt)
   }
 
   /** q245's scorer reading the STORED index — the serve path of the

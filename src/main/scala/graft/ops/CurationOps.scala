@@ -1207,11 +1207,7 @@ object CurationOps {
     val curated = scrub
       .join(gate.where(!col("gated")).select(col("doc_id"), col("n_toks")),
         Seq("doc_id"))
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    dropTable(spark, tbl)
     curated.select(col("doc_id"), col("lang"), col("text"), col("n_toks"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("lang").format("parquet").saveAsTable(tbl)

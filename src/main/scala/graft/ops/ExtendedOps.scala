@@ -691,12 +691,7 @@ object ExtendedOps {
     def rewrite(name: String, src: org.apache.spark.sql.DataFrame,
         key: String): org.apache.spark.sql.DataFrame = {
       val tbl = s"graft_q62_${name}_bucketed"
-      // same catalog + location reset as q42/q55: Overwrite can't reclaim
-      // a location the (fresh in-memory) catalog never registered
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), tbl)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+      dropTable(spark, tbl)
       src.repartition(8, col(key))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .bucketBy(8, key).sortBy(key)
@@ -729,15 +724,8 @@ object ExtendedOps {
     */
   def dppFacts(spark: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    def reset(tbl: String): Unit = {
-      // same catalog + location reset as q42/q55/q62
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), tbl)
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-    }
     val factTbl = "graft_q103_fact"
-    reset(factTbl)
+    dropTable(spark, factTbl)
     t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         year(col("o_orderdate")).as("o_year"))
@@ -747,7 +735,7 @@ object ExtendedOps {
       .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .format("parquet").saveAsTable(factTbl)
     val lineTbl = "graft_q103_line"
-    reset(lineTbl)
+    dropTable(spark, lineTbl)
     t(spark, dir, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount")
       .repartition(8, col("l_orderkey"))

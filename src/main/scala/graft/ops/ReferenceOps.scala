@@ -462,14 +462,7 @@ object ReferenceOps {
             .agg(count(lit(1)).as("n_orders"),
               moneySum(col("o_totalprice")).as("revenue"))
         val tbl = "graft_q42_roundtrip"
-        // A fresh session's in-memory catalog doesn't know the table, but a
-        // previous run's warehouse directory may survive on disk — Overwrite
-        // can't reclaim a location the catalog never registered
-        // (LOCATION_ALREADY_EXISTS), so drop both catalog entry and location.
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), tbl)
-        loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+        dropTable(spark, tbl)
         slice(0).write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(tbl)
         slice(1).write.mode(SaveMode.Append).format("parquet").saveAsTable(tbl)
         // partial revenues sit on a 2dp grid -> decimal re-sum is exact
@@ -495,12 +488,7 @@ object ReferenceOps {
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
       (spark, dir) => {
         val tbl = "graft_q55_partitioned"
-        // same catalog + location reset as q42: Overwrite can't reclaim a
-        // location the (fresh in-memory) catalog never registered
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), tbl)
-        loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+        dropTable(spark, tbl)
         t(spark, dir, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .write.mode(SaveMode.Overwrite)

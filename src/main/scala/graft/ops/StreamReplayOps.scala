@@ -1742,18 +1742,6 @@ object StreamReplayOps {
     */
   def annCensusSplitReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // phase timing to stderr when SPARK_GRAFT_TD_TIMING is set (the
-    // takedownSweep convention) — the suite's biggest bench line must
-    // stay inspectable
-    val t0 = System.nanoTime()
-    var lastMark = t0
-    def mark(phase: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_TD_TIMING")) {
-        val now = System.nanoTime()
-        System.err.println(f"[q377] $phase: ${(now - lastMark) / 1e9}%.2fs " +
-          f"(total ${(now - t0) / 1e9}%.2fs)")
-        lastMark = now
-      }
     val base = replayScratchBase("graft-anncs-replay")
     val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val v = SimilarityOps.vectors(spark, dir)
@@ -1768,7 +1756,6 @@ object StreamReplayOps {
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anncs_m")
     landTimeSlices(spark, shifted.withColumn("slice_key", col("vec_id")),
       nSlices = 3, landing, None)
-    mark("build + land")
     withReplayPartitions(spark) {
       graft.streaming.StreamingAnnMaintain.maintainAvailableNow(
         spark, landing, "graft_anncs_m", ckpt,
@@ -1776,12 +1763,10 @@ object StreamReplayOps {
         maxFilesPerTrigger = Some(1), censusSplit = true)
         .awaitTermination()
     }
-    mark("streamed maintain (3 batches, censusSplit)")
     // the unsplit twin: batch-append the same content, no repair (the
     // base build is a memo clone — one append-encode, not two fits)
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anncs_u")
     AnnIndexOps.appendToIndex(spark, shifted, "graft_anncs_u")
-    mark("unsplit twin build + append")
     // q363's audit frame: queries from both regions, equal weight
     val full = v.unionByName(
       shifted.select(col("vec_id"), col("label"), col("v")))
@@ -1795,15 +1780,12 @@ object StreamReplayOps {
     // one exact pass shared by both twins' audits (the q363 shape)
     val exact = SimilarityOps.bruteForceTopK(full, q, 5)
       .localCheckpoint(true)
-    mark("shared brute-force exact pass")
     def recall(prefix: String): Map[Long, Long] =
       AnnIndexOps.serveRecallAudit(spark, full, q, prefix,
           exactOpt = Some(exact)).collect()
         .map(r => r.getLong(0) -> r.getLong(3)).toMap
     val ru = recall("graft_anncs_u")
-    mark("recall audit (unsplit twin)")
     val rm = recall("graft_anncs_m")
-    mark("recall audit (maintained)")
     val rows = Seq(
       ("fat_cells", fatCount("graft_anncs_u"), fatCount("graft_anncs_m")),
       ("n_cells", spark.table("graft_anncs_u_centroids").count(),

@@ -64,15 +64,11 @@ import graft.util.Tables._
 object TakedownOps {
 
   private def reset(spark: SparkSession, tbl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    dropTable(spark, tbl)
     // a rematerialized table may pin different property values — the
     // per-JVM property caches must not outlive the table
     docBucketsCache.remove(propKey(spark, tbl))
     maxDocIdCache.remove(propKey(spark, tbl))
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
   }
 
   private def saveTable(df: DataFrame, tbl: String,
@@ -237,28 +233,24 @@ object TakedownOps {
     maxDocIdCache.put(propKey(spark, tbl), v)
   }
 
-  private[graft] def tableMaxDocId(spark: SparkSession,
-      tbl: String): Option[Long] = {
+  /** The pinned max-doc-id watermark of a relation a materialize path
+    * wrote: those paths always pin it (Long.MinValue for an empty
+    * relation), so a missing pin means a table this code did not write,
+    * and the watermark cannot be trusted. */
+  private[graft] def pinnedMaxDocId(spark: SparkSession, tbl: String): Long = {
     val key = propKey(spark, tbl)
     val cached = maxDocIdCache.get(key)
-    if (cached != null) return Some(cached.longValue())
-    val rows = spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.maxDocId')")
-      .collect()
-    val pinned = rows.headOption.map(_.getString(1))
+    if (cached != null) return cached.longValue()
+    val pinned = spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.maxDocId')")
+      .collect().headOption.map(_.getString(1))
       .filter(s => s.nonEmpty && s.forall(c => c.isDigit || c == '-'))
       .map(_.toLong)
-    pinned.foreach(v => maxDocIdCache.put(key, v))
+      .getOrElse(throw new IllegalStateException(
+        s"$tbl has no graft.maxDocId property: it was not materialized by " +
+          "this code; rebuild it"))
+    maxDocIdCache.put(key, pinned)
     pinned
   }
-
-  /** [[tableMaxDocId]] of a relation a materialize path wrote: those
-    * paths always pin it (Long.MinValue for an empty relation), so a
-    * missing pin means a table this code did not write, and the
-    * watermark cannot be trusted. */
-  private[graft] def pinnedMaxDocId(spark: SparkSession, tbl: String): Long =
-    tableMaxDocId(spark, tbl).getOrElse(throw new IllegalStateException(
-      s"$tbl has no graft.maxDocId property: it was not materialized by " +
-        "this code; rebuild it"))
 
   private def maxOrMin(r: Row): Long =
     if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
@@ -534,42 +526,23 @@ object TakedownOps {
     */
   def appendToCurated(spark: SparkSession, newDocs: DataFrame,
       prefix: String): Unit = {
-    // phase timing to stderr when SPARK_GRAFT_TD_TIMING is set (the
-    // takedownSweep convention) — this is the per-micro-batch hot path
-    // of q355/q357/q361, keep its cost inspectable
-    var lastMark = System.nanoTime()
-    def mark(phase: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_TD_TIMING")) {
-        val now = System.nanoTime()
-        System.err.println(
-          f"[appendToCurated] $phase: ${(now - lastMark) / 1e9}%.2fs")
-        lastMark = now
-      }
     val tn = curatedTables(prefix)
     val parsN = DedupOps.paragraphs(
         newDocs.select(col("doc_id"), col("text")), 20)
       .localCheckpoint(true)
     if (parsN.isEmpty) return
-    mark("paragraphs")
     val bucketsN = DedupOps.minhashBuckets(
         parsN.select(col("pid").as("doc_id"), col("par").as("text")), 8, 8)
       .select(col("doc_id").as("pid"), col("band"), col("bhash"))
       .localCheckpoint(true)
-    mark("minhash buckets")
-    // the append contract: batch pids strictly above every stored pid.
-    // The stored maximum comes from the pinned watermark property when
-    // present — O(1) catalog metadata instead of a per-batch id-column
-    // scan of the whole pars relation
-    val maxOld: Option[Long] = tableMaxDocId(spark, tn.pars)
-      .orElse {
-        val r = spark.table(tn.pars).agg(max(col("pid"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
+    // the append contract: batch pids strictly above every stored pid,
+    // the pinned watermark property (O(1) catalog metadata)
+    val maxOld = pinnedMaxDocId(spark, tn.pars)
     val newStats = parsN.agg(min(col("pid")), max(col("pid"))).head()
     val minNew = newStats.getLong(0)
-    require(maxOld.forall(minNew > _),
+    require(minNew > maxOld,
       s"appendToCurated: batch pid $minNew interleaves the stored corpus " +
-        s"(max stored pid ${maxOld.getOrElse(-1L)}) — an interleaved id " +
+        s"(max stored pid $maxOld) — an interleaved id " +
         "could retroactively flip a stored keep-first verdict; rebuild " +
         "instead")
     // combined bucket minima over exactly the batch's bucket keys: the
@@ -586,13 +559,11 @@ object TakedownOps {
       .withColumn("bmin", least(coalesce(col("omin"), col("nmin")),
         col("nmin")))
       .groupBy("pid").agg(min(col("bmin")).as("canonical_pid"))
-    mark("contract checks")
     val parsV = parsN.join(verdicts, Seq("pid"))
       .withColumn("dup", col("canonical_pid") < col("pid"))
       .select(col("doc_id"), col("par_idx"), col("pid"), col("par"),
         col("par_toks"), col("dup"))
       .localCheckpoint(true)
-    mark("verdicts")
     // pure appends: new files land only in the batch's partition
     // directories; stored rows never move. insertInto is positional:
     // align to the table's column order (partition column last)
@@ -600,19 +571,15 @@ object TakedownOps {
     withPb(parsV, "doc_id", bPr)
       .select(spark.table(tn.pars).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.pars)
-    pinMaxDocId(spark, tn.pars,
-      math.max(maxOld.getOrElse(Long.MinValue), newStats.getLong(1)))
-    mark("pars append")
+    pinMaxDocId(spark, tn.pars, math.max(maxOld, newStats.getLong(1)))
     val bBk = tableDocBuckets(spark, tn.buckets)
     withPart(bucketsN, col("pid"), bBk, "qb")
       .select(spark.table(tn.buckets).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.buckets)
-    mark("buckets append")
     val bCu = tableDocBuckets(spark, tn.curated)
     withPart(curatedFromPars(parsV, newDocs), col("doc_id"), bCu, "cb")
       .select(spark.table(tn.curated).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.curated)
-    mark("curated gate+append")
   }
 
   // ------------------------------------------------------------------
@@ -767,21 +734,15 @@ object TakedownOps {
     if (bucketsN.isEmpty) return
     val clustersT = spark.table(tn.clusters)
     val bucketsT = spark.table(tn.dbuckets)
-    // the freshness contract: batch ids strictly above every stored id.
-    // The stored maximum comes from the pinned watermark property when
-    // present — O(1) catalog metadata where the fallback is a per-batch
-    // id-column scan of the whole relation
-    val maxOld: Option[Long] = tableMaxDocId(spark, tn.clusters)
-      .orElse {
-        val r = clustersT.agg(max(col("doc_id"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
+    // the freshness contract: batch ids strictly above every stored id,
+    // the pinned watermark property (O(1) catalog metadata)
+    val maxOld = pinnedMaxDocId(spark, tn.clusters)
     val newStats = newDocs.agg(min(col("doc_id")), count(col("doc_id")),
       countDistinct(col("doc_id")), max(col("doc_id"))).head()
     val minNew = newStats.getLong(0)
-    require(maxOld.forall(minNew > _),
+    require(minNew > maxOld,
       s"appendToClusters: batch doc_id $minNew interleaves the stored " +
-        s"corpus (max stored doc_id ${maxOld.getOrElse(-1L)}) — ids must " +
+        s"corpus (max stored doc_id $maxOld) — ids must " +
         "be globally fresh or the bucket relation fuses distinct docs")
     // a duplicate WITHIN the batch passes the ordering check but fuses
     // two documents' bucket rows just the same (ADVICE r15)
@@ -829,8 +790,7 @@ object TakedownOps {
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
     replaceBuckets(spark, tn.clusters, clB,
       withPb(keptIn.unionByName(relabeled), "doc_id", bCl))
-    pinMaxDocId(spark, tn.clusters,
-      math.max(maxOld.getOrElse(Long.MinValue), newStats.getLong(3)))
+    pinMaxDocId(spark, tn.clusters, math.max(maxOld, newStats.getLong(3)))
   }
 
   /** q372 body: the cluster-map LIFECYCLE COMPOSED — q357's doctrine on
@@ -946,19 +906,14 @@ object TakedownOps {
       .localCheckpoint(true)
     if (keyedN.isEmpty) return
     val keyedT = spark.table(tn.keyed)
-    // stored max from the pinned watermark property when present — the
-    // fallback id-column scan only runs for pre-property tables
-    val maxOld: Option[Long] = tableMaxDocId(spark, tn.keyed)
-      .orElse {
-        val r = keyedT.agg(max(col("doc_id"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
+    // stored max from the pinned watermark property
+    val maxOld = pinnedMaxDocId(spark, tn.keyed)
     val newStats = keyedN.agg(min(col("doc_id")), count(col("doc_id")),
       countDistinct(col("doc_id")), max(col("doc_id"))).head()
     val minNew = newStats.getLong(0)
-    require(maxOld.forall(minNew > _),
+    require(minNew > maxOld,
       s"appendToMedia: batch doc_id $minNew interleaves the stored corpus " +
-        s"(max stored ${maxOld.getOrElse(-1L)}) — ids must be fresh")
+        s"(max stored $maxOld) — ids must be fresh")
     // an intra-batch duplicate passes the ordering check but appends
     // the same ownership row twice, double-counting that doc in every
     // cluster recompute (ADVICE r15)
@@ -979,23 +934,12 @@ object TakedownOps {
       .select(keyedT.columns.map(col): _*)
       .write.mode(SaveMode.Append).format("parquet")
       .insertInto(tn.keyed)
-    pinMaxDocId(spark, tn.keyed,
-      math.max(maxOld.getOrElse(Long.MinValue), newStats.getLong(3)))
+    pinMaxDocId(spark, tn.keyed, math.max(maxOld, newStats.getLong(3)))
     val bSg = tableDocBuckets(spark, tn.sigs)
     withPart(sigsN, col("media_key"), bSg, "sb")
       .select(spark.table(tn.sigs).columns.map(col): _*)
       .write.mode(SaveMode.Append).format("parquet")
       .insertInto(tn.sigs)
-    // the cluster recompute below re-reads BOTH tables through this
-    // session's relation cache, and the appends above may have been
-    // written through a DIFFERENT session's Dataset (foreachBatch hands
-    // over frames bound to the stream's cloned session, whose write-side
-    // invalidation does not reach this session's cache — the q351
-    // lesson). Without the refresh the recompute sees the PRE-append
-    // listing and every touched group loses the batch's own owners
-    // (caught by StreamingMediaMaintainSpec's from-scratch compare).
-    spark.catalog.refreshTable(tn.keyed)
-    spark.catalog.refreshTable(tn.sigs)
     // recompute exactly the cluster GROUPS the batch's keys belong to.
     // Groups are keyed by SIGNATURE, not media_key: a stored key whose
     // payload fingerprint collides with a batch key's (cross-payload
@@ -1176,17 +1120,6 @@ object TakedownOps {
     */
   def takedownSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // phase timing to stderr when SPARK_GRAFT_TD_TIMING is set — the
-    // sweep is the suite's biggest composite, keep its cost inspectable
-    val t0 = System.nanoTime()
-    var last = t0
-    def mark(phase: String): Unit =
-      if (sys.env.contains("SPARK_GRAFT_TD_TIMING")) {
-        val now = System.nanoTime()
-        System.err.println(f"[td] $phase: ${(now - last) / 1e9}%.2fs " +
-          f"(total ${(now - t0) / 1e9}%.2fs)")
-        last = now
-      }
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val delDocs = docs.where(col("doc_id") % 13 === 0)
@@ -1198,7 +1131,6 @@ object TakedownOps {
     val curBefore = spark.table(ct.curated).count()
     val curDeleted = spark.table(ct.curated)
       .join(broadcast(delDocs), Seq("doc_id")).count()
-    mark("curated materialize+counts")
     takedownCurated(spark, docs, delDocs, "graft_td")
     val curAfter = spark.table(ct.curated).count()
     val curResidue =
@@ -1207,18 +1139,15 @@ object TakedownOps {
         spark.table(ct.buckets)
           .select(shiftright(col("pid"), 20).as("doc_id"))
           .join(broadcast(delDocs), Seq("doc_id")).count()
-    mark("curated takedown+counts")
     val curRebuild = curatedFromPars(parsAndBuckets(survDocs)._1, survDocs)
     val curMatches =
       curatedCensus(spark.table(ct.curated)) == curatedCensus(curRebuild)
 
-    mark("curated rebuild compare")
     // -- dedup cluster map ----------------------------------------------
     val kt = clustersMaterializeWithProvenance(spark, docs, "graft_td")
     val cluBefore = spark.table(kt.clusters).count()
     val cluDeleted = spark.table(kt.clusters)
       .join(broadcast(delDocs), Seq("doc_id")).count()
-    mark("clusters materialize+counts")
     takedownClusters(spark, delDocs, "graft_td")
     val cluAfter = spark.table(kt.clusters).count()
     // residue: a surviving row keyed by a deleted doc OR labeled by a
@@ -1229,14 +1158,12 @@ object TakedownOps {
           .join(broadcast(delDocs.select(col("doc_id").as("cluster_id"))),
             Seq("cluster_id")).count() +
         spark.table(kt.dbuckets).join(broadcast(delDocs), Seq("doc_id")).count()
-    mark("clusters takedown+counts")
     val cluMatches = eqSets(
       spark.table(kt.clusters)
         .select(col("doc_id"), col("cluster_id"), col("is_dup")),
       DedupOps.starClusters(survDocs).select(col("doc_id"),
         col("cluster_id"), col("is_dup")))
 
-    mark("clusters rebuild compare")
     // -- stored ANN index -----------------------------------------------
     val v = SimilarityOps.vectors(spark, dir)
     val delVecs = v.where(col("vec_id") % 11 === 0).select(col("vec_id"))
@@ -1244,7 +1171,6 @@ object TakedownOps {
     val at = AnnIndexOps.tables("graft_tdann")
     AnnIndexOps.buildResidualIndex(spark, v, "graft_tdann")
     val q = SimilarityOps.queriesOf(v, 20)
-    mark("ann build")
     val preServe = AnnIndexOps.serveTopK(spark, q, "graft_tdann")
       .localCheckpoint(true)
     val serveBefore = preServe.count()
@@ -1255,11 +1181,9 @@ object TakedownOps {
     val vecsBefore = spark.table(at.vectors).count()
     val vecsDeleted = spark.table(at.vectors)
       .join(broadcast(delVecs), Seq("vec_id")).count()
-    mark("ann pre-serve+counts")
     AnnIndexOps.takedownIndex(spark, "graft_tdann", delVecs)
     val rt = AnnIndexOps.rebuildWithFrozen(spark, survVecs, "graft_tdann",
       "graft_tdannrb")
-    mark("ann takedown+rebuild")
     val codesAfter = spark.table(at.codes).count()
     val codesResidue = spark.table(at.codes)
       .join(broadcast(delVecs), Seq("vec_id")).count()
@@ -1275,7 +1199,6 @@ object TakedownOps {
     val serveMatch = eqSets(postServe,
       AnnIndexOps.serveTopK(spark, q, "graft_tdannrb"))
 
-    mark("ann compares+serves")
     Seq(
       ("ann_codes", codesBefore, codesDeleted, codesAfter, codesResidue,
         if (codesMatch) 1 else 0),

@@ -1085,18 +1085,9 @@ object VocabModelOps {
   private def derivedC1(c12: DataFrame): DataFrame =
     c12.groupBy("w1").agg(sum(col("c12")).as("c1"))
 
-  private def lmReset(spark: org.apache.spark.sql.SparkSession,
-      tbl: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), tbl)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
-  }
-
   private def lmSave(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, tbl: String): Unit = {
-    lmReset(spark, tbl)
+    dropTable(spark, tbl)
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(tbl)
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.AnnIndexOps
@@ -37,23 +37,9 @@ object StreamingAnnTakedown {
       indexPrefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        AnnIndexOps.addTombstones(spark, indexPrefix, batch)
-        // micro-batch writes run on the stream's cloned session — keep
-        // the outer session's relation cache current (the
-        // StreamingAnnMaintain lesson) so the next batch's anti-join
-        // and any concurrent serve see the landed tombstones
-        spark.catalog.refreshTable(AnnIndexOps.tombstoneTable(indexPrefix))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      GraftBridge.checkpointOn(spark, batch.select(col("vec_id")))
+    } (AnnIndexOps.addTombstones(spark, indexPrefix, _))
 }

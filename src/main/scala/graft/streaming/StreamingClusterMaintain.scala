@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TakedownOps
@@ -33,32 +33,12 @@ object StreamingClusterMaintain {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = TakedownOps.clusterTables(prefix)
-        // watermark from the pinned table property (O(1) catalog
-        // metadata). The gate is the only work on the stream's session:
-        // one job materializes and counts the fresh rows and re-roots
-        // them on the caller's session, whose code-generation cache the
-        // merge's plans then hit
-        val wm = TakedownOps.pinnedMaxDocId(spark, tn.clusters)
-        val (fresh, n) =
-          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-        if (n > 0) {
-          TakedownOps.appendToClusters(spark, fresh, prefix)
-          // cloned-session relation-cache refresh (the q351 lesson)
-          spark.catalog.refreshTable(tn.clusters)
-          spark.catalog.refreshTable(tn.dbuckets)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      // watermark from the pinned table property (O(1) catalog metadata)
+      val wm = TakedownOps.pinnedMaxDocId(spark,
+        TakedownOps.clusterTables(prefix).clusters)
+      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+    } (TakedownOps.appendToClusters(spark, _, prefix))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TakedownOps
@@ -38,32 +38,14 @@ object StreamingClusterTakedown {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = TakedownOps.clusterTables(prefix)
-        // idempotency gate: only ids still PRESENT in the stored map
-        // need work — a redelivered batch drains to nothing here. The
-        // batch ids are materialized once and re-rooted on the caller's
-        // session, so the bucket-pruned probe and the repair compile
-        // against its code-generation cache, not the stream's
-        val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
-        val (present, nPresent) =
-          if (n == 0) (ids, 0L) else TakedownOps.presentIds(spark, ids, tn.clusters)
-        if (nPresent > 0) {
-          TakedownOps.takedownClusters(spark, present, prefix)
-          // cloned-session relation-cache refresh (the q351 lesson)
-          spark.catalog.refreshTable(tn.clusters)
-          spark.catalog.refreshTable(tn.dbuckets)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      // only ids still PRESENT in the stored map need work: a redelivered
+      // batch drains to nothing here. The batch ids are re-rooted first,
+      // so the bucket-pruned probe plans on the caller's session
+      val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
+      if (n == 0) (ids, 0L)
+      else TakedownOps.presentIds(spark, ids, TakedownOps.clusterTables(prefix).clusters)
+    } (TakedownOps.takedownClusters(spark, _, prefix))
 }

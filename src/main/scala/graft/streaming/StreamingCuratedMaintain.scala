@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TakedownOps
@@ -39,39 +39,13 @@ object StreamingCuratedMaintain {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = TakedownOps.curatedTables(prefix)
-        // watermark from the pinned max-pid property (O(1) catalog
-        // metadata); pid >> 20 recovers the owning doc_id
-        val wm = TakedownOps.pinnedMaxDocId(spark, tn.pars) >> 20
-        // materialized once (the fresh slice is consumed several times
-        // inside the append: contract min, banding, verdicts, writes) and
-        // re-rooted on the caller's session, so the append's plans hit
-        // its code-generation cache instead of recompiling per stream
-        val (fresh, n) =
-          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-        if (n > 0) {
-          TakedownOps.appendToCurated(spark, fresh, prefix)
-          // the micro-batch runs on the stream's CLONED session, whose
-          // catalog invalidation does not reach the outer session's
-          // relation cache (the q351 lesson): without explicit
-          // refreshes the next batch's watermark (and any post-stream
-          // readback) reads the pre-append file listing and the append
-          // is silently invisible
-          spark.catalog.refreshTable(tn.curated)
-          spark.catalog.refreshTable(tn.pars)
-          spark.catalog.refreshTable(tn.buckets)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      // watermark from the pinned max-pid property (O(1) catalog
+      // metadata); pid >> 20 recovers the owning doc_id
+      val wm = TakedownOps.pinnedMaxDocId(spark,
+        TakedownOps.curatedTables(prefix).pars) >> 20
+      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+    } (TakedownOps.appendToCurated(spark, _, prefix))
 }

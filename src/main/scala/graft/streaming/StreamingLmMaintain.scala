@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.VocabModelOps
+import graft.util.Tables
 
 /** Streamed LANGUAGE-MODEL MAINTENANCE — the 27th streaming component:
   * train-document batches arrive as a stream and every micro-batch is
@@ -51,13 +52,8 @@ object StreamingLmMaintain {
     * tier over). Callers reset it right after materializing the base
     * model.
     */
-  def resetWatermark(spark: SparkSession, prefix: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${watermarkTable(prefix)}")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), watermarkTable(prefix))
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
-  }
+  def resetWatermark(spark: SparkSession, prefix: String): Unit =
+    Tables.dropTable(spark, watermarkTable(prefix))
 
   private def watermark(spark: SparkSession, prefix: String): Long =
     if (spark.catalog.tableExists(watermarkTable(prefix))) {
@@ -72,35 +68,15 @@ object StreamingLmMaintain {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val wm = watermark(spark, prefix)
-        // one job materializes the fresh rows and re-roots them on the
-        // caller's session (see StreamingClusterMaintain)
-        val (fresh, n) =
-          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-        if (n > 0) {
-          VocabModelOps.learnLm(spark, fresh, prefix)
-          val newWm = fresh.agg(max(col("doc_id")).as("max_doc_id"))
-            .localCheckpoint(true)
-          newWm.write.mode(SaveMode.Overwrite).format("parquet")
-            .saveAsTable(watermarkTable(prefix))
-          // cloned-session relation-cache refresh (the q351 lesson):
-          // the next batch's watermark read and the post-stream
-          // scoring must see this batch's writes
-          val tn = VocabModelOps.lmTables(prefix)
-          Seq(tn.c12, tn.cw, watermarkTable(prefix))
-            .foreach(spark.catalog.refreshTable)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      val wm = watermark(spark, prefix)
+      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+    } { fresh =>
+      VocabModelOps.learnLm(spark, fresh, prefix)
+      fresh.agg(max(col("doc_id")).as("max_doc_id")).localCheckpoint(true)
+        .write.mode(SaveMode.Overwrite).format("parquet")
+        .saveAsTable(watermarkTable(prefix))
+    }
 }

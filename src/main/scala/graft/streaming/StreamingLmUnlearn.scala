@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.VocabModelOps
+import graft.util.Tables
 
 /** Streamed LM UNLEARNING — the 34th streaming component, the deletion
   * side of the trained-model lifecycle ([[StreamingLmMaintain]] is the
@@ -39,13 +40,8 @@ object StreamingLmUnlearn {
     * prefix — a leftover set would silently gate a fresh stream's
     * deletions to nothing (the resetWatermark hazard, deletion-side).
     */
-  def resetProcessed(spark: SparkSession, prefix: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${processedTable(prefix)}")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), processedTable(prefix))
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
-  }
+  def resetProcessed(spark: SparkSession, prefix: String): Unit =
+    Tables.dropTable(spark, processedTable(prefix))
 
   def unlearnAvailableNow(
       spark: SparkSession,
@@ -53,36 +49,21 @@ object StreamingLmUnlearn {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val pt = processedTable(prefix)
-        // intra-batch duplicate rows of the same doc would subtract
-        // that doc twice; rows are (doc_id, text) so duplicates are
-        // identical and any one representative is exact
-        val deduped = batch.dropDuplicates("doc_id")
-        // one job materializes the unprocessed rows and re-roots them on
-        // the caller's session (see StreamingClusterMaintain)
-        val (fresh, n) = GraftBridge.checkpointOn(spark,
-          if (spark.catalog.tableExists(pt))
-            deduped.join(spark.table(pt), Seq("doc_id"), "left_anti")
-          else deduped)
-        if (n > 0) {
-          VocabModelOps.unlearnLm(spark, fresh, prefix)
-          fresh.select(col("doc_id")).write.mode(SaveMode.Append)
-            .format("parquet").saveAsTable(pt)
-          // cloned-session relation-cache refresh (the q351 lesson)
-          val tn = VocabModelOps.lmTables(prefix)
-          Seq(tn.c12, tn.cw, pt).foreach(spark.catalog.refreshTable)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      val pt = processedTable(prefix)
+      // intra-batch duplicate rows of the same doc would subtract that
+      // doc twice; rows are (doc_id, text) so duplicates are identical
+      // and any one representative is exact
+      val deduped = batch.dropDuplicates("doc_id")
+      GraftBridge.checkpointOn(spark,
+        if (spark.catalog.tableExists(pt))
+          deduped.join(spark.table(pt), Seq("doc_id"), "left_anti")
+        else deduped)
+    } { fresh =>
+      VocabModelOps.unlearnLm(spark, fresh, prefix)
+      fresh.select(col("doc_id")).write.mode(SaveMode.Append)
+        .format("parquet").saveAsTable(processedTable(prefix))
+    }
 }

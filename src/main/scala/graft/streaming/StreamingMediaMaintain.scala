@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TakedownOps
@@ -37,32 +37,12 @@ object StreamingMediaMaintain {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = TakedownOps.mediaTables(prefix)
-        // watermark from the pinned table property (O(1) catalog
-        // metadata); one job materializes the fresh rows and re-roots
-        // them on the caller's session (see StreamingClusterMaintain)
-        val wm = TakedownOps.pinnedMaxDocId(spark, tn.keyed)
-        val (fresh, n) =
-          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-        if (n > 0) {
-          TakedownOps.appendToMedia(spark, fresh, prefix)
-          // cloned-session relation-cache refresh (the q351 lesson):
-          // the next batch's watermark read and the post-stream
-          // readback must see this batch's writes
-          Seq(tn.keyed, tn.sigs, tn.clusters)
-            .foreach(spark.catalog.refreshTable)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      // watermark from the pinned table property (O(1) catalog metadata)
+      val wm = TakedownOps.pinnedMaxDocId(spark,
+        TakedownOps.mediaTables(prefix).keyed)
+      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+    } (TakedownOps.appendToMedia(spark, _, prefix))
 }

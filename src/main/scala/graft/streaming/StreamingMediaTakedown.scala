@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.TakedownOps
@@ -34,28 +34,13 @@ object StreamingMediaTakedown {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = TakedownOps.mediaTables(prefix)
-        // idempotency probe pruned to the batch ids' pb partitions, on
-        // the caller's session (see StreamingClusterTakedown)
-        val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
-        val (present, nPresent) =
-          if (n == 0) (ids, 0L) else TakedownOps.presentIds(spark, ids, tn.keyed)
-        if (nPresent > 0) {
-          TakedownOps.takedownMedia(spark, present, prefix)
-          Seq(tn.keyed, tn.sigs, tn.clusters)
-            .foreach(spark.catalog.refreshTable)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      // the presence probe of StreamingClusterTakedown, on the ownership
+      // relation
+      val (ids, n) = GraftBridge.checkpointOn(spark, batch.select(col("doc_id")))
+      if (n == 0) (ids, 0L)
+      else TakedownOps.presentIds(spark, ids, TakedownOps.mediaTables(prefix).keyed)
+    } (TakedownOps.takedownMedia(spark, _, prefix))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.CorpusStatsOps
@@ -34,30 +34,12 @@ object StreamingSearchIndexMaintain {
       prefix: String,
       checkpointDir: String,
       schema: StructType,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val tn = CorpusStatsOps.searchIndexTables(prefix)
-        val wmRow = spark.table(tn.dl).agg(max(col("doc_id"))).head()
-        val wm = if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-        // one job materializes the fresh rows and re-roots them on the
-        // caller's session (see StreamingClusterMaintain)
-        val (fresh, n) =
-          GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-        if (n > 0) {
-          CorpusStatsOps.searchIndexAppend(spark, fresh, prefix)
-          // cloned-session relation-cache refresh (the q351 lesson)
-          spark.catalog.refreshTable(tn.postings)
-          spark.catalog.refreshTable(tn.dl)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    TierStream.availableNow(spark, landingDir, checkpointDir, schema,
+        maxFilesPerTrigger) { batch =>
+      val wmRow = spark.table(CorpusStatsOps.searchIndexTables(prefix).dl)
+        .agg(max(col("doc_id"))).head()
+      val wm = if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
+      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
+    } (CorpusStatsOps.searchIndexAppend(spark, _, prefix))
 }

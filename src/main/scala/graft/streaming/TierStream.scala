@@ -1,0 +1,49 @@
+package graft.streaming
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+
+/** The one skeleton of every streamed maintain, takedown and unlearn
+  * tier: parquet files landed under `landingDir` are read as a stream,
+  * drained once (`AvailableNow`), and every micro-batch runs the tier's
+  * `gate` and then, when the gate kept any row, its `apply`.
+  *
+  * The gate is the only plan on the stream's batch, which belongs to
+  * the stream's cloned session. It drops what an earlier delivery
+  * already applied (the tier's exactly-once rule) and returns the rows
+  * left, materialized and re-rooted on the caller's long-lived session
+  * by `GraftBridge.checkpointOn`, with their count. The apply then
+  * plans only on the caller's session: its generated classes compile
+  * once per JVM, and its table writes invalidate that session's own
+  * relation cache, so the next batch's gate and any later reader see
+  * them without a refresh.
+  */
+object TierStream {
+
+  def availableNow(
+      spark: SparkSession,
+      landingDir: String,
+      checkpointDir: String,
+      schema: StructType,
+      maxFilesPerTrigger: Option[Int])(
+      gate: DataFrame => (DataFrame, Long))(
+      apply: DataFrame => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader
+      .parquet(landingDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val (rows, n) = gate(batch)
+        if (n > 0) {
+          require(rows.sparkSession eq spark,
+            "a tier gate must return its rows re-rooted on the caller's session")
+          apply(rows)
+        }
+      }
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+}

@@ -26,6 +26,18 @@ object Tables {
   def withViews(spark: SparkSession, dir: String, names: String*): Unit =
     names.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
 
+  /** Drop a managed table and delete its warehouse location: a fresh
+    * session's in-memory catalog may not know a table whose directory a
+    * previous run left on disk, and an Overwrite cannot reclaim a
+    * location the catalog never registered (LOCATION_ALREADY_EXISTS).
+    */
+  def dropTable(spark: SparkSession, tbl: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), tbl)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+  }
+
   /** Exact money representation for aggregation. */
   def money(c: Column): Column = c.cast(DecimalType(18, 4))
 

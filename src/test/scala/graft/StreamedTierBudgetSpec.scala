@@ -5,10 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.TakedownOps
-import graft.streaming.{StreamingClusterMaintain, StreamingClusterTakedown}
+import graft.ops.{AnnIndexOps, SimilarityOps, TakedownOps}
+import graft.streaming.{StreamingAnnTakedown, StreamingClusterMaintain, StreamingClusterTakedown}
 
-/** What one streamed micro-batch of a doc-keyed tier costs the driver:
+/** What one streamed micro-batch of a maintained tier costs the driver:
   * Spark jobs, and classes compiled by a warm call. The gate is the
   * only work on the stream's cloned session; the tier body runs on the
   * caller's session and hits its code-generation cache, so a warm call
@@ -19,11 +19,15 @@ class StreamedTierBudgetSpec extends SparkSpec with DriverBudget {
 
   // measured: 52 and 31 jobs (53 and 32 with the gate's isEmpty probe
   // on the stream's session); 7-15 and 5 classes (148 and 47 with the
-  // tier body planned on the stream's session)
+  // tier body planned on the stream's session). The ANN tombstone tier:
+  // 5 jobs and 2 classes (4 and 8 with the tombstone append planned on
+  // the stream's session)
   private val MaintainJobs = 52
   private val TakedownJobs = 31
   private val MaintainCompiled = 30L
   private val TakedownCompiled = 20L
+  private val AnnTakedownJobs = 5
+  private val AnnTakedownCompiled = 2L
 
   private def docs = graft.util.Tables.t(spark, sf, "documents")
     .select(col("doc_id"), col("text"))
@@ -76,5 +80,21 @@ class StreamedTierBudgetSpec extends SparkSpec with DriverBudget {
     assert(jobs <= TakedownJobs, s"one micro-batch ran $jobs Spark jobs")
     assert(compiled <= TakedownCompiled,
       s"a later takedown call compiled $compiled classes: the repair recompiles per call")
+  }
+
+  test("an ANN takedown micro-batch stays within its job budget; a later call compiles only the gate") {
+    val v = SimilarityOps.vectors(spark, sf)
+    AnnIndexOps.buildResidualIndex(spark, v, "graft_atbudget")
+    val batches = (0 until 3).map(k =>
+      v.where(col("vec_id") % 17 === k).select(col("vec_id")))
+    val (jobs, compiled) = thirdCall(batches, (landing, ckpt) =>
+      StreamingAnnTakedown.takedownAvailableNow(spark, landing, "graft_atbudget", ckpt,
+        StructType.fromDDL("vec_id BIGINT")).awaitTermination(120000))
+    info(s"micro-batch jobs $jobs, compilations $compiled")
+    assert(spark.table(AnnIndexOps.tombstoneTable("graft_atbudget")).count() ===
+      v.where(col("vec_id") % 17 < 3).count(), "fixture: every batch must land")
+    assert(jobs <= AnnTakedownJobs, s"one micro-batch ran $jobs Spark jobs")
+    assert(compiled <= AnnTakedownCompiled,
+      s"a later takedown call compiled $compiled classes: the tombstone append recompiles per call")
   }
 }

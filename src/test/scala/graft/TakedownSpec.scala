@@ -262,6 +262,18 @@ class TakedownSpec extends SparkSpec {
       TakedownOps.appendToClusters(spark, dup, "graft_claspec")
     }
     assert(e2.getMessage.contains("duplicated"))
+
+    // a stored map with no graft.maxDocId pin (a copy this code did not
+    // materialize) has no trustworthy watermark: the append must throw,
+    // not scan the id column
+    Seq("clusters", "dbuckets").foreach(t =>
+      spark.table(s"graft_claspec_$t").write.mode("overwrite")
+        .partitionBy("pb").format("parquet").saveAsTable(s"graft_clanopin_$t"))
+    val e3 = intercept[IllegalStateException] {
+      TakedownOps.appendToClusters(spark, batch2.withColumn("doc_id", lit(40L)),
+        "graft_clanopin")
+    }
+    assert(e3.getMessage.contains("no graft.maxDocId property"))
   }
 
   test("cluster lifecycle: the takedown splits a component the MERGE created") {
