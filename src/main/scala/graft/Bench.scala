@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 object Bench {
   private def esc(s: String): String = s.flatMap {
     case '"'  => "\\\""
@@ -9,23 +9,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the real core count when the env var is absent (driver
-    // always sets it; a bare local run should not accidentally time
-    // local[4] plans) — the driver contract is unchanged: when set,
-    // SPARK_GRAFT_CPUS wins
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.ts is parquet TIMESTAMP(NANOS); see EventOps.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // every harness (Verify/ScaleRehearsal/SparkSpec) pins UTC so the
-      // NTZ->TIMESTAMP casts and date_format queries are machine-
-      // independent; bench must match or its numbers time a different plan
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen/shuffle/parquet machinery so the first timed
     // query doesn't absorb session startup (~5s otherwise); include a
@@ -128,7 +112,7 @@ object Bench {
     // `suspect_cpus_ignored` because the contract was unverifiable from
     // the artifacts alone (VERDICT r17 #6) — the env var still wins
     // when set, nothing about the timed region changes
-    val envJson = s""""cpus":$cpus,"master":"local[$cpus]""""
+    val envJson = s""""cpus":${LocalSession.cpus},"master":"local[${LocalSession.cpus}]""""
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},$envJson$errJson,"queries":$qs,"means":$means,"reps":$reps,"sf":"$sfDir"}""")
     // the driver captures only the TAIL of sbt output; with 160+ queries
     // the full line above can get truncated mid-map and lose the headline

@@ -1,25 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to the box's real core count, not a constant: a verify run
-    // whose caller forgot the env var used to silently run local[4] and
-    // take 4-8x longer (the most plausible cause of round 16's empty
-    // driver correctness file — a timeout, not a red engine)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see EventOps.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // runtime unpartitioned-window guard (VERDICT r15 #2): eagerly-

@@ -105,7 +105,7 @@ object AnnIndexOps {
     * re-appends its deleted ids (resurrection) — exactly what the full
     * anti-join does (an absent id is indistinguishable from a never-seen
     * one); deletion-under-streaming is the tombstone tier's job (q356),
-    * not this watermark's. Unlike [[TakedownOps.pinMaxDocId]]'s
+    * not this watermark's. Unlike [[graft.util.Tables.pinMaxDocId]]'s
     * HISTORICAL doctrine for the doc tiers, whose append contract
     * (strictly-above ids) must reject reused ids forever. None when the
     * side relation is absent or empty (callers fall back to the full
@@ -605,15 +605,8 @@ object AnnIndexOps {
     * anti-join append).
     */
   def addTombstones(spark: SparkSession, prefix: String,
-      ids: DataFrame): Unit = {
-    val tbl = tombstoneTable(prefix)
-    val fresh = tombstoneSet(spark, prefix).fold(
-        ids.select(col("vec_id")).distinct())(existing =>
-        ids.select(col("vec_id")).distinct()
-          .join(existing, Seq("vec_id"), "left_anti"))
-      .localCheckpoint(true)
-    fresh.write.mode(SaveMode.Append).format("parquet").saveAsTable(tbl)
-  }
+      ids: DataFrame): Unit =
+    appendAbsent(spark, tombstoneTable(prefix), ids, "vec_id")
 
   /** Fold the pending tombstones into one physical rewrite
     * ([[takedownIndex]]) and truncate them — the compaction step a

@@ -842,34 +842,36 @@ object CorpusStatsOps {
     val (post, dl) = idxRelations(docs)
     // the tombstone table resets with the index: a leftover pending
     // set from an earlier life of this prefix would silently filter a
-    // fresh index's serves (the resetWatermark hazard, q378's tier)
+    // fresh index's serves (q378's tier)
     Seq(tn.postings, tn.dl, searchTombTable(prefix))
       .foreach(dropTable(spark, _))
     post.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(tn.postings)
     dl.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .format("parquet").saveAsTable(tn.dl)
+    pinMaxDocId(spark, tn.dl, maxDocId(spark.table(tn.dl)))
     tn
   }
 
   /** O(batch) index growth: new docs' rows are disjoint from stored
     * ones, so the append touches no existing row — the cheapest cell
     * of any maintenance matrix in the engine. The strictly-above id
-    * contract is the uniqueness guarantee (a duplicated doc_id would
-    * silently double that doc's tf mass).
+    * contract, against the dl relation's pinned historical max doc_id,
+    * is the uniqueness guarantee (a duplicated doc_id would silently
+    * double that doc's tf mass).
     */
   def searchIndexAppend(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, prefix: String): Unit = {
     val tn = searchIndexTables(prefix)
     val (post, dl) = idxRelations(newDocs)
-    val maxOld = spark.table(tn.dl).agg(max(col("doc_id"))).head()
+    val maxOld = pinnedMaxDocId(spark, tn.dl)
     val minNewR = newDocs.agg(min(col("doc_id")), count(col("doc_id")),
-      countDistinct(col("doc_id"))).head()
+      countDistinct(col("doc_id")), max(col("doc_id"))).head()
     if (minNewR.isNullAt(0)) return
     val minNew = minNewR.getLong(0)
-    require(maxOld.isNullAt(0) || minNew > maxOld.getLong(0),
+    require(minNew > maxOld,
       s"searchIndexAppend: batch doc_id $minNew interleaves the stored " +
-        s"corpus (max stored ${maxOld.getLong(0)}) — ids must be fresh " +
+        s"corpus (max stored $maxOld) — ids must be fresh " +
         "or a doc's tf mass double-counts")
     // the cross-batch ordering above can't see a duplicate WITHIN one
     // batch, which double-counts that doc's tf mass just the same
@@ -882,13 +884,15 @@ object CorpusStatsOps {
       .format("parquet").saveAsTable(tn.postings)
     dl.write.mode(org.apache.spark.sql.SaveMode.Append)
       .format("parquet").saveAsTable(tn.dl)
+    pinMaxDocId(spark, tn.dl, minNewR.getLong(3))
   }
 
-  /** Doc-keyed takedown: one anti-join rewrite per relation. The
-    * derived views (df, corpus totals) forget the deleted docs by
-    * construction — BM25's idf and length normalization shift exactly
-    * as a from-scratch index on the survivors would, which is what the
-    * q369 oracle (a full DuckDB rebuild on survivors) proves.
+  /** Doc-keyed takedown: one anti-join rewrite per relation, in place,
+    * so the dl relation keeps its historical doc_id pin. The derived
+    * views (df, corpus totals) forget the deleted docs by construction —
+    * BM25's idf and length normalization shift exactly as a
+    * from-scratch index on the survivors would, which is what the q369
+    * oracle (a full DuckDB rebuild on survivors) proves.
     */
   def searchIndexTakedown(spark: org.apache.spark.sql.SparkSession,
       deletedDocs: DataFrame, prefix: String): Unit = {
@@ -896,11 +900,9 @@ object CorpusStatsOps {
     val del = broadcast(deletedDocs.select(col("doc_id")).distinct()
       .localCheckpoint(true))
     Seq(tn.postings, tn.dl).foreach { tbl =>
-      val snap = spark.table(tbl).join(del, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      dropTable(spark, tbl)
-      snap.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .format("parquet").saveAsTable(tbl)
+      overwriteInPlace(spark, tbl,
+        spark.table(tbl).join(del, Seq("doc_id"), "left_anti")
+          .localCheckpoint(true))
     }
   }
 
@@ -919,23 +921,14 @@ object CorpusStatsOps {
     * not just "the doc is hidden". [[applySearchTombstones]] folds the
     * accumulated set into ONE physical takedown rewrite and retires
     * the tombstone table. Deletion is idempotent by nature; the
-    * anti-join on add just keeps the pending set duplicate-free under
-    * at-least-once delivery.
+    * presence-set append ([[graft.util.Tables.appendAbsent]]) just keeps
+    * the pending set duplicate-free under at-least-once delivery, and
+    * never creates it empty (an empty pending set would make the apply
+    * rewrite the whole index for nothing).
     */
   def addSearchTombstones(spark: org.apache.spark.sql.SparkSession,
-      deletedDocs: DataFrame, prefix: String): Unit = {
-    val tt = searchTombTable(prefix)
-    val del = deletedDocs.select(col("doc_id")).distinct()
-      .localCheckpoint(true)
-    val fresh =
-      if (spark.catalog.tableExists(tt))
-        del.join(spark.table(tt), Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
-      else del
-    if (!fresh.isEmpty)
-      fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(tt)
-  }
+      deletedDocs: DataFrame, prefix: String): Unit =
+    appendAbsent(spark, searchTombTable(prefix), deletedDocs, "doc_id")
 
   /** Fold the pending tombstones into one physical rewrite (the q369
     * takedown) and retire the tombstone table. Serves are byte-

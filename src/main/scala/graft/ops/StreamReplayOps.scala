@@ -1430,8 +1430,8 @@ object StreamReplayOps {
     * commutative, so the streamed model is batching-independent and
     * the census grades against q328's OWN full SQL oracle — streamed,
     * batch-append, and from-scratch training are one contract.
-    * Exactly-once (persisted doc_id high-watermark) is pinned by
-    * StreamingLmMaintainSpec's wiped-checkpoint re-run.
+    * Exactly-once (the c12 relation's pinned doc_id high-watermark) is
+    * pinned by StreamingLmMaintainSpec's wiped-checkpoint re-run.
     */
   def lmMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
     val base = replayScratchBase("graft-lm-replay")
@@ -1443,8 +1443,6 @@ object StreamReplayOps {
       .getLong(0)
     VocabModelOps.lmMaterialize(spark,
       train.where(col("doc_id") <= cut), "graft_lmstream")
-    graft.streaming.StreamingLmMaintain.resetWatermark(spark,
-      "graft_lmstream")
     landTimeSlices(spark, train.where(col("doc_id") > cut)
         .withColumn("slice_key", col("doc_id")),
       nSlices = 3, landing, None)
@@ -1466,9 +1464,9 @@ object StreamReplayOps {
     * as time slices, append each micro-batch's disjoint rows, then
     * serve BM25 from the grown stored index. Graded against q245's OWN
     * full SQL oracle — streamed, batch-append, and from-scratch
-    * indexing are one contract. Exactly-once (dl high-watermark) is
-    * pinned by StreamingSearchIndexMaintainSpec's wiped-checkpoint
-    * re-run.
+    * indexing are one contract. Exactly-once (the dl relation's pinned
+    * doc_id high-watermark) is pinned by SearchIndexSpec's
+    * wiped-checkpoint re-runs.
     */
   def searchIndexMaintainReplay(spark: SparkSession,
       dir: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,14 +63,6 @@ import graft.util.Tables._
   */
 object TakedownOps {
 
-  private def reset(spark: SparkSession, tbl: String): Unit = {
-    dropTable(spark, tbl)
-    // a rematerialized table may pin different property values — the
-    // per-JVM property caches must not outlive the table
-    docBucketsCache.remove(propKey(spark, tbl))
-    maxDocIdCache.remove(propKey(spark, tbl))
-  }
-
   private def saveTable(df: DataFrame, tbl: String,
       partitionCols: Seq[String] = Nil): Unit = {
     // NOTE (guide §6, measured r18): no explicit clustering shuffle
@@ -90,69 +82,25 @@ object TakedownOps {
   // Surgical bucket-partitioned maintenance writes (VERDICT r16 #3/#5)
   // ------------------------------------------------------------------
 
-  /** Bucket count for the doc-keyed maintained relations. Read from the
-    * conf at MATERIALIZE time only and pinned as a table property — the
-    * partition layout is a property of the stored table, and a conf
-    * change between materialize and maintenance must not scatter rows
-    * across inconsistent bucket functions. Default 16 suits the bench
-    * SFs; a production deployment sizes it so one bucket is a few GB
-    * (e.g. 4096 at 100 TB), keeping each maintenance batch's rewrite a
-    * small constant number of directories.
+  /** Bucket count of every doc-keyed maintained relation: each is
+    * partitioned by `pmod(key, DocBuckets)`, so a maintenance batch
+    * rewrites a few bucket directories instead of the relation. A
+    * constant, not a setting: the layout of a stored table must not
+    * depend on a conf read at maintenance time. 16 suits the bench
+    * scale factors; a deployment at 100 TB would want a bucket of a few
+    * GB (about 4096) and a rebuild to change it.
     */
-  private def confDocBuckets(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.maintenance.docBuckets", "16").toInt
-
-  /** Per-JVM caches over the pinned table properties. The bucket count
-    * is immutable once pinned (the partition layout is a property of
-    * the stored table) and the max-doc-id watermark is written only
-    * through [[pinMaxDocId]], so both reads can be served from memory —
-    * a streamed maintain was paying several `SHOW TBLPROPERTIES …
-    * collect()` driver round-trips per micro-batch for values that
-    * never change between pins (VERDICT r17 #1; guide §1.2 don't
-    * recompute). Keys carry the warehouse dir so per-suite temp
-    * warehouses never alias; [[reset]] drops both entries, and the
-    * pinners write through, so a cached value is always the pinned one.
-    */
-  private val docBucketsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private val maxDocIdCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def propKey(spark: SparkSession, tbl: String): String =
-    spark.conf.get("spark.sql.warehouse.dir") + "#" + tbl
-
-  private def pinDocBuckets(spark: SparkSession, tbl: String,
-      b: Int): Unit = {
-    spark.sql(
-      s"ALTER TABLE $tbl SET TBLPROPERTIES('graft.docBuckets'='$b')")
-    docBucketsCache.put(propKey(spark, tbl), b)
-  }
-
-  private[graft] def tableDocBuckets(spark: SparkSession, tbl: String): Int = {
-    val key = propKey(spark, tbl)
-    val cached = docBucketsCache.get(key)
-    if (cached != null) return cached.intValue()
-    val rows = spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.docBuckets')")
-      .collect()
-    val pinned = rows.headOption.map(_.getString(1))
-      .filter(_.forall(_.isDigit)).map(_.toInt)
-    // only a PINNED value is cached: the conf fallback (tables built
-    // outside the materialize paths — spec fixtures) may legitimately
-    // differ per suite and must keep reading the live conf
-    pinned.foreach(b => docBucketsCache.put(key, b))
-    pinned.getOrElse(confDocBuckets(spark))
-  }
+  private val DocBuckets = 16
 
   /** pmod-of-key partition column. The names (pb/qb/sb/cb) are
     * reserved: graded readers all select explicit columns, so the extra
     * column never reaches an output.
     */
-  private def withPb(df: DataFrame, keyCol: String, b: Int): DataFrame =
-    withPart(df, col(keyCol), b, "pb")
+  private def withPb(df: DataFrame, keyCol: String): DataFrame =
+    withPart(df, col(keyCol), "pb")
 
-  private def withPart(df: DataFrame, key: Column, b: Int,
-      name: String): DataFrame =
-    df.withColumn(name, pmod(key, lit(b.toLong)).cast("int"))
+  private def withPart(df: DataFrame, key: Column, name: String): DataFrame =
+    df.withColumn(name, pmod(key, lit(DocBuckets.toLong)).cast("int"))
 
   /** Deterministic partition key for the signature-keyed media cluster
     * relation (its rows carry no id column — groups are keyed by the
@@ -212,48 +160,12 @@ object TakedownOps {
     * driver metadata bounded by the table's bucket count, the
     * probed-cell-list convention.
     */
-  private def bucketsOf(ids: DataFrame, keyCol: String, b: Int): Seq[Int] =
-    bucketsOfKey(ids, col(keyCol), b)
+  private def bucketsOf(ids: DataFrame, keyCol: String): Seq[Int] =
+    bucketsOfKey(ids, col(keyCol))
 
-  private def bucketsOfKey(ids: DataFrame, key: Column, b: Int): Seq[Int] =
-    ids.select(pmod(key, lit(b.toLong)).cast("int").as("pb"))
+  private def bucketsOfKey(ids: DataFrame, key: Column): Seq[Int] =
+    ids.select(pmod(key, lit(DocBuckets.toLong)).cast("int").as("pb"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-
-  /** Highest doc_id ever appended, pinned as a table property so the
-    * freshness contract and the streamed maintain's watermark read
-    * catalog metadata instead of scanning the id column per batch —
-    * O(1) where the scan was O(corpus) per trigger. HISTORICAL (never
-    * lowered by a takedown): an id reused after deletion is not fresh,
-    * so the strictly-above contract correctly rejects it.
-    */
-  private def pinMaxDocId(spark: SparkSession, tbl: String,
-      v: Long): Unit = {
-    spark.sql(
-      s"ALTER TABLE $tbl SET TBLPROPERTIES('graft.maxDocId'='$v')")
-    maxDocIdCache.put(propKey(spark, tbl), v)
-  }
-
-  /** The pinned max-doc-id watermark of a relation a materialize path
-    * wrote: those paths always pin it (Long.MinValue for an empty
-    * relation), so a missing pin means a table this code did not write,
-    * and the watermark cannot be trusted. */
-  private[graft] def pinnedMaxDocId(spark: SparkSession, tbl: String): Long = {
-    val key = propKey(spark, tbl)
-    val cached = maxDocIdCache.get(key)
-    if (cached != null) return cached.longValue()
-    val pinned = spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.maxDocId')")
-      .collect().headOption.map(_.getString(1))
-      .filter(s => s.nonEmpty && s.forall(c => c.isDigit || c == '-'))
-      .map(_.toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"$tbl has no graft.maxDocId property: it was not materialized by " +
-          "this code; rebuild it"))
-    maxDocIdCache.put(key, pinned)
-    pinned
-  }
-
-  private def maxOrMin(r: Row): Long =
-    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
 
   /** The ids of `ids` (a `doc_id` frame rooted on `spark`) still present
     * in the pb-partitioned relation `tbl`, materialized and re-rooted on
@@ -266,7 +178,7 @@ object TakedownOps {
     val t = spark.table(tbl)
     require(t.columns.contains("pb"), s"$tbl has no pb partition column: " +
       "it was not materialized by this code; rebuild it")
-    val pbs = bucketsOf(ids, "doc_id", tableDocBuckets(spark, tbl))
+    val pbs = bucketsOf(ids, "doc_id")
     GraftBridge.checkpointOn(spark,
       ids.join(t.where(col("pb").isin(pbs: _*)), Seq("doc_id"), "left_semi"))
   }
@@ -377,7 +289,6 @@ object TakedownOps {
   def curatedMaterializeWithProvenance(spark: SparkSession,
       docs: DataFrame, prefix: String): CuratedTables = {
     val tn = curatedTables(prefix)
-    val b = confDocBuckets(spark)
     // checkpointed: the paragraph explode over the whole corpus is
     // consumed TWICE (the buckets write's minhash lineage AND the parsV
     // write) — without the cut the corpus-scale paragraphs pass ran
@@ -390,29 +301,25 @@ object TakedownOps {
     val buckets = DedupOps.minhashBuckets(
         pars.select(col("pid").as("doc_id"), col("par").as("text")), 8, 8)
       .select(col("doc_id").as("pid"), col("band"), col("bhash"))
-    Seq(tn.curated, tn.pars, tn.buckets).foreach(reset(spark, _))
+    Seq(tn.curated, tn.pars, tn.buckets).foreach(dropTable(spark, _))
     // buckets land first so the verdict derivation (and everything
     // after) reads the STORED relation instead of re-running the
     // minhash lineage. All three relations are bucket-partitioned
     // (VERDICT r16 #5): pars/curated by doc, buckets by pid — a later
     // takedown/append rewrites only affected directories
-    saveTable(withPart(buckets, col("pid"), b, "qb"), tn.buckets,
+    saveTable(withPart(buckets, col("pid"), "qb"), tn.buckets,
       Seq("qb"))
-    pinDocBuckets(spark, tn.buckets, b)
     val parsV = pars
       .join(verdictsFromBuckets(spark.table(tn.buckets)), Seq("pid"))
       .withColumn("dup", col("canonical_pid") < col("pid"))
       .select(col("doc_id"), col("par_idx"), col("pid"), col("par"),
         col("par_toks"), col("dup"))
-    saveTable(withPb(parsV, "doc_id", b), tn.pars, Seq("pb"))
-    pinDocBuckets(spark, tn.pars, b)
-    pinMaxDocId(spark, tn.pars,
-      maxOrMin(spark.table(tn.pars).agg(max(col("pid"))).head()))
+    saveTable(withPb(parsV, "doc_id"), tn.pars, Seq("pb"))
+    pinMaxDocId(spark, tn.pars, maxDocId(spark.table(tn.pars)))
     saveTable(
       withPart(curatedFromPars(spark.table(tn.pars), docs),
-        col("doc_id"), b, "cb"),
+        col("doc_id"), "cb"),
       tn.curated, Seq("cb"))
-    pinDocBuckets(spark, tn.curated, b)
     tn
   }
 
@@ -468,17 +375,15 @@ object TakedownOps {
     // candidate-owner docs; buckets — deleted pids' partitions;
     // curated — deleted + repaired docs' partitions. Untouched
     // directories' files never move.
-    val bPr = tableDocBuckets(spark, tn.pars)
     val prB = bucketsOf(del.unionByName(candDocs.select(col("doc_id"))),
-      "doc_id", bPr)
+      "doc_id")
     replaceBuckets(spark, tn.pars, prB,
       parsT.where(col("pb").isin(prB: _*))
         .join(del, Seq("doc_id"), "left_anti")
         .join(newVerdicts, Seq("pid"), "left")
         .withColumn("dup", coalesce(col("new_dup"), col("dup")))
         .drop("new_dup"))
-    val bBk = tableDocBuckets(spark, tn.buckets)
-    val bkB = bucketsOfKey(deletedPids, col("pid"), bBk)
+    val bkB = bucketsOfKey(deletedPids, col("pid"))
     replaceBuckets(spark, tn.buckets, bkB,
       bucketsT.where(col("qb").isin(bkB: _*))
         .join(deletedPids, Seq("pid"), "left_anti"), "qb")
@@ -487,24 +392,16 @@ object TakedownOps {
     // gated-out doc can re-enter when it regains paragraphs)
     val repaired = curatedFromPars(
       spark.table(tn.pars).join(affectedDocs, Seq("doc_id")), docs)
-    val bCu = tableDocBuckets(spark, tn.curated)
     val cuB = bucketsOf(
-      del.unionByName(affectedDocs.select(col("doc_id"))), "doc_id", bCu)
+      del.unionByName(affectedDocs.select(col("doc_id"))), "doc_id")
     val keptIn = spark.table(tn.curated).where(col("cb").isin(cuB: _*))
       .join(del, Seq("doc_id"), "left_anti")
       .join(affectedDocs, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("text"), col("n_toks"))
     replaceBuckets(spark, tn.curated, cuB,
-      withPart(keptIn.unionByName(repaired), col("doc_id"), bCu, "cb"),
+      withPart(keptIn.unionByName(repaired), col("doc_id"), "cb"),
       "cb")
   }
-
-  /** q348's readback census as a relation — q355/q357 grade against
-    * q348's own golden through [[CurationOps.curatedCensusOf]], the
-    * single shared definition.
-    */
-  private def curatedCensusDf(df: DataFrame): DataFrame =
-    CurationOps.curatedCensusOf(df)
 
   /** q355 body: INCREMENTAL curated-corpus maintenance — the daily-
     * ingest shape (q73's doctrine) applied to q348's materialization:
@@ -535,14 +432,14 @@ object TakedownOps {
         parsN.select(col("pid").as("doc_id"), col("par").as("text")), 8, 8)
       .select(col("doc_id").as("pid"), col("band"), col("bhash"))
       .localCheckpoint(true)
-    // the append contract: batch pids strictly above every stored pid,
+    // the append contract: batch docs strictly above every stored doc,
     // the pinned watermark property (O(1) catalog metadata)
     val maxOld = pinnedMaxDocId(spark, tn.pars)
-    val newStats = parsN.agg(min(col("pid")), max(col("pid"))).head()
+    val newStats = parsN.agg(min(col("doc_id")), max(col("doc_id"))).head()
     val minNew = newStats.getLong(0)
     require(minNew > maxOld,
-      s"appendToCurated: batch pid $minNew interleaves the stored corpus " +
-        s"(max stored pid $maxOld) — an interleaved id " +
+      s"appendToCurated: batch doc_id $minNew interleaves the stored " +
+        s"corpus (max stored doc_id $maxOld) — an interleaved id " +
         "could retroactively flip a stored keep-first verdict; rebuild " +
         "instead")
     // combined bucket minima over exactly the batch's bucket keys: the
@@ -567,17 +464,14 @@ object TakedownOps {
     // pure appends: new files land only in the batch's partition
     // directories; stored rows never move. insertInto is positional:
     // align to the table's column order (partition column last)
-    val bPr = tableDocBuckets(spark, tn.pars)
-    withPb(parsV, "doc_id", bPr)
+    withPb(parsV, "doc_id")
       .select(spark.table(tn.pars).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.pars)
-    pinMaxDocId(spark, tn.pars, math.max(maxOld, newStats.getLong(1)))
-    val bBk = tableDocBuckets(spark, tn.buckets)
-    withPart(bucketsN, col("pid"), bBk, "qb")
+    pinMaxDocId(spark, tn.pars, newStats.getLong(1))
+    withPart(bucketsN, col("pid"), "qb")
       .select(spark.table(tn.buckets).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.buckets)
-    val bCu = tableDocBuckets(spark, tn.curated)
-    withPart(curatedFromPars(parsV, newDocs), col("doc_id"), bCu, "cb")
+    withPart(curatedFromPars(parsV, newDocs), col("doc_id"), "cb")
       .select(spark.table(tn.curated).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(tn.curated)
   }
@@ -620,21 +514,18 @@ object TakedownOps {
   def clustersMaterializeWithProvenance(spark: SparkSession,
       docs: DataFrame, prefix: String): ClusterTables = {
     val tn = clusterTables(prefix)
-    val b = confDocBuckets(spark)
     val buckets = DedupOps.minhashBuckets(
       docs.select(col("doc_id"), col("text")), 8, 8)
-    Seq(tn.clusters, tn.dbuckets).foreach(reset(spark, _))
+    Seq(tn.clusters, tn.dbuckets).foreach(dropTable(spark, _))
     // pb-partitioned layout (VERDICT r16 #3): maintenance batches then
     // rewrite only the partition directories holding affected docs'
     // rows instead of the whole relation — see [[replaceBuckets]]
-    saveTable(withPb(buckets, "doc_id", b), tn.dbuckets, Seq("pb"))
-    pinDocBuckets(spark, tn.dbuckets, b)
+    saveTable(withPb(buckets, "doc_id"), tn.dbuckets, Seq("pb"))
     val (labels, _) = DedupOps.starComponentsWithRounds(
       edgesFromBuckets(spark.table(tn.dbuckets)))
-    saveTable(withPb(labelsToClusters(docs, labels), "doc_id", b),
+    saveTable(withPb(labelsToClusters(docs, labels), "doc_id"),
       tn.clusters, Seq("pb"))
-    pinDocBuckets(spark, tn.clusters, b)
-    pinMaxDocId(spark, tn.clusters, maxOrMin(docs.agg(max(col("doc_id"))).head()))
+    pinMaxDocId(spark, tn.clusters, maxDocId(docs))
     tn
   }
 
@@ -672,16 +563,14 @@ object TakedownOps {
     // (VERDICT r16 #3): clusters — buckets of deleted + relabeled docs;
     // dbuckets — buckets of deleted docs. Untouched directories' files
     // never move (TakedownSpec pins the immobility).
-    val bCl = tableDocBuckets(spark, tn.clusters)
     val clB = bucketsOf(del.unionByName(affMembers.select(col("doc_id"))),
-      "doc_id", bCl)
+      "doc_id")
     val keptIn = clustersT.where(col("pb").isin(clB: _*))
       .join(affComps, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
     replaceBuckets(spark, tn.clusters, clB,
-      withPb(keptIn.unionByName(relabeled), "doc_id", bCl))
-    val bDb = tableDocBuckets(spark, tn.dbuckets)
-    val delB = bucketsOf(del, "doc_id", bDb)
+      withPb(keptIn.unionByName(relabeled), "doc_id"))
+    val delB = bucketsOf(del, "doc_id")
     replaceBuckets(spark, tn.dbuckets, delB,
       bucketsT.where(col("pb").isin(delB: _*))
         .join(del, Seq("doc_id"), "left_anti"))
@@ -773,24 +662,22 @@ object TakedownOps {
       affMembers.unionByName(newDocs.select(col("doc_id"))), labels)
     // dbuckets: a pure append — new files land only in the batch's pb
     // directories, stored rows never move
-    val bDb = tableDocBuckets(spark, tn.dbuckets)
-    withPb(bucketsN, "doc_id", bDb)
+    withPb(bucketsN, "doc_id")
       .select(spark.table(tn.dbuckets).columns.map(col): _*)
       .write.mode(SaveMode.Append).format("parquet")
       .insertInto(tn.dbuckets)
     // clusters: surgical rewrite of only the buckets holding relabeled
     // or batch docs (VERDICT r16 #3)
-    val bCl = tableDocBuckets(spark, tn.clusters)
     val clB = bucketsOf(
       affMembers.select(col("doc_id"))
         .unionByName(newDocs.select(col("doc_id"))).localCheckpoint(true),
-      "doc_id", bCl)
+      "doc_id")
     val keptIn = clustersT.where(col("pb").isin(clB: _*))
       .join(affComps, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
     replaceBuckets(spark, tn.clusters, clB,
-      withPb(keptIn.unionByName(relabeled), "doc_id", bCl))
-    pinMaxDocId(spark, tn.clusters, math.max(maxOld, newStats.getLong(3)))
+      withPb(keptIn.unionByName(relabeled), "doc_id"))
+    pinMaxDocId(spark, tn.clusters, newStats.getLong(3))
   }
 
   /** q372 body: the cluster-map LIFECYCLE COMPOSED — q357's doctrine on
@@ -869,21 +756,17 @@ object TakedownOps {
   def mediaMaterialize(spark: SparkSession, docs: DataFrame,
       prefix: String): MediaTables = {
     val tn = mediaTables(prefix)
-    val b = confDocBuckets(spark)
-    Seq(tn.keyed, tn.sigs, tn.clusters).foreach(reset(spark, _))
+    Seq(tn.keyed, tn.sigs, tn.clusters).foreach(dropTable(spark, _))
     // bucket-partitioned layout (VERDICT r16 #5): ownership by doc_id,
     // fingerprints by media_key, clusters by signature hash — so the
     // maintenance paths rewrite only affected directories
-    saveTable(withPb(mediaKeyed(docs), "doc_id", b), tn.keyed, Seq("pb"))
-    pinDocBuckets(spark, tn.keyed, b)
-    pinMaxDocId(spark, tn.keyed, maxOrMin(docs.agg(max(col("doc_id"))).head()))
+    saveTable(withPb(mediaKeyed(docs), "doc_id"), tn.keyed, Seq("pb"))
+    pinMaxDocId(spark, tn.keyed, maxDocId(docs))
     saveTable(withPart(mediaSigs(spark, spark.table(tn.keyed)),
-      col("media_key"), b, "sb"), tn.sigs, Seq("sb"))
-    pinDocBuckets(spark, tn.sigs, b)
+      col("media_key"), "sb"), tn.sigs, Seq("sb"))
     saveTable(withPart(
       mediaClusters(spark.table(tn.keyed), spark.table(tn.sigs)),
-      sigPart, b, "cb"), tn.clusters, Seq("cb"))
-    pinDocBuckets(spark, tn.clusters, b)
+      sigPart, "cb"), tn.clusters, Seq("cb"))
     tn
   }
 
@@ -929,14 +812,12 @@ object TakedownOps {
       .localCheckpoint(true)
     // pure appends: new files land only in the batch's partition
     // directories; stored rows never move
-    val bKd = tableDocBuckets(spark, tn.keyed)
-    withPb(keyedN, "doc_id", bKd)
+    withPb(keyedN, "doc_id")
       .select(keyedT.columns.map(col): _*)
       .write.mode(SaveMode.Append).format("parquet")
       .insertInto(tn.keyed)
-    pinMaxDocId(spark, tn.keyed, math.max(maxOld, newStats.getLong(3)))
-    val bSg = tableDocBuckets(spark, tn.sigs)
-    withPart(sigsN, col("media_key"), bSg, "sb")
+    pinMaxDocId(spark, tn.keyed, newStats.getLong(3))
+    withPart(sigsN, col("media_key"), "sb")
       .select(spark.table(tn.sigs).columns.map(col): _*)
       .write.mode(SaveMode.Append).format("parquet")
       .insertInto(tn.sigs)
@@ -964,13 +845,12 @@ object TakedownOps {
       affSigRel)
     // surgical rewrite of only the signature-hash buckets holding the
     // affected groups (VERDICT r16 #5)
-    val bCl = tableDocBuckets(spark, tn.clusters)
-    val clB = bucketsOfKey(affSigs, sigPart, bCl)
+    val clB = bucketsOfKey(affSigs, sigPart)
     val keptIn = spark.table(tn.clusters).where(col("cb").isin(clB: _*))
       .join(affSigs, sigCols, "left_anti")
       .select((sigCols :+ "canonical_id" :+ "n_members").map(col): _*)
     replaceBuckets(spark, tn.clusters, clB,
-      withPart(keptIn.unionByName(recomputed), sigPart, bCl, "cb"), "cb")
+      withPart(keptIn.unionByName(recomputed), sigPart, "cb"), "cb")
   }
 
   /** Media-artifact takedown: delete the docs' ownership rows, retire
@@ -1020,20 +900,17 @@ object TakedownOps {
     // is materialized before any directory moves): clusters — affected
     // signature groups' buckets; sigs — retired keys' buckets; keyed —
     // deleted docs' buckets
-    val bCl = tableDocBuckets(spark, tn.clusters)
-    val clB = bucketsOfKey(affSigs, sigPart, bCl)
+    val clB = bucketsOfKey(affSigs, sigPart)
     val keptIn = spark.table(tn.clusters).where(col("cb").isin(clB: _*))
       .join(affSigs, sigCols, "left_anti")
       .select((sigCols :+ "canonical_id" :+ "n_members").map(col): _*)
     replaceBuckets(spark, tn.clusters, clB,
-      withPart(keptIn.unionByName(recomputed), sigPart, bCl, "cb"), "cb")
-    val bSg = tableDocBuckets(spark, tn.sigs)
-    val sgB = bucketsOf(deadKeys, "media_key", bSg)
+      withPart(keptIn.unionByName(recomputed), sigPart, "cb"), "cb")
+    val sgB = bucketsOf(deadKeys, "media_key")
     replaceBuckets(spark, tn.sigs, sgB,
       sigsT.where(col("sb").isin(sgB: _*))
         .join(deadKeys, Seq("media_key"), "left_anti"), "sb")
-    val bKd = tableDocBuckets(spark, tn.keyed)
-    val kdB = bucketsOf(del, "doc_id", bKd)
+    val kdB = bucketsOf(del, "doc_id")
     replaceBuckets(spark, tn.keyed, kdB,
       keyedT.where(col("pb").isin(kdB: _*))
         .join(del, Seq("doc_id"), "left_anti"), "pb")
@@ -1239,12 +1116,12 @@ object TakedownOps {
     val delDocs = docs.where(col("doc_id") % 13 === 0).select(col("doc_id"))
     takedownCurated(spark, docs, delDocs, "graft_lc")
     val surv = docs.where(col("doc_id") % 13 =!= 0)
-    val rebuild = curatedCensusDf(
+    val rebuild = CurationOps.curatedCensusOf(
       curatedFromPars(parsAndBuckets(surv)._1, surv))
       .withColumnRenamed("n_docs", "r_docs")
       .withColumnRenamed("n_tokens", "r_tokens")
       .withColumnRenamed("fingerprint", "r_fp")
-    curatedCensusDf(spark.table("graft_lc_curated"))
+    CurationOps.curatedCensusOf(spark.table("graft_lc_curated"))
       .join(rebuild, Seq("lang"), "full")
       .select(col("lang"), col("n_docs"), col("n_tokens"),
         col("fingerprint"),
@@ -1431,7 +1308,7 @@ object TakedownOps {
         curatedMaterializeWithProvenance(spark,
           docs.where(col("doc_id") <= cut), "graft_ca")
         appendToCurated(spark, docs.where(col("doc_id") > cut), "graft_ca")
-        curatedCensusDf(spark.table("graft_ca_curated"))
+        CurationOps.curatedCensusOf(spark.table("graft_ca_curated"))
       }),
 
     // Right-to-be-forgotten sweep across every materialized artifact:

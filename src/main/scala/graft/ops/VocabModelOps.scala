@@ -1108,7 +1108,9 @@ object VocabModelOps {
 
   /** Persist the q328 bigram model as STORED relations — c₁₂ and the
     * word-count vocabulary — the form [[unlearnLm]] / [[learnLm]] can
-    * maintain under deletion/append without a retrain.
+    * maintain under deletion/append without a retrain. The highest
+    * train doc_id is pinned on c₁₂: the streamed learn's exactly-once
+    * watermark ([[graft.streaming.StreamingLmMaintain]]).
     */
   def lmMaterialize(spark: org.apache.spark.sql.SparkSession,
       train: DataFrame, prefix: String): LmTables = {
@@ -1116,6 +1118,7 @@ object VocabModelOps {
     val (c12, _, _) = bigramModel(train)
     lmSave(spark, c12, tn.c12)
     lmSave(spark, wordCounts(train), tn.cw)
+    pinMaxDocId(spark, tn.c12, maxDocId(train))
     tn
   }
 
@@ -1130,7 +1133,8 @@ object VocabModelOps {
     * O(batch) delta compute + vocabulary-bounded rewrites (the
     * [[unlearnLm]] shape with +
     * instead of −; together they close the model lifecycle matrix:
-    * materialize / append / unlearn).
+    * materialize / append / unlearn). The fold raises the c₁₂ doc_id
+    * pin, so a stream that later redelivers these docs skips them.
     */
   def learnLm(spark: org.apache.spark.sql.SparkSession,
       newTrain: DataFrame, prefix: String): Unit = {
@@ -1145,10 +1149,11 @@ object VocabModelOps {
           (coalesce(col("a"), lit(0L)) + coalesce(col("d"), lit(0L)))
             .as(cnt)): _*)
         .localCheckpoint(true)
-      lmSave(spark, updated, tbl)
+      overwriteInPlace(spark, tbl, updated)
     }
     add(tn.c12, Seq("w1", "w2"), "c12", d12)
     add(tn.cw, Seq("w"), "cw", dw)
+    pinMaxDocId(spark, tn.c12, maxDocId(newTrain))
   }
 
   /** Score the odd slice against the STORED model relations — the
@@ -1218,7 +1223,7 @@ object VocabModelOps {
           (col(cnt) - coalesce(col("d"), lit(0L))).as(cnt)): _*)
         .where(col(cnt) > 0)
         .localCheckpoint(true)
-      lmSave(spark, updated, tbl)
+      overwriteInPlace(spark, tbl, updated)
     }
     subtract(tn.c12, Seq("w1", "w2"), "c12", d12)
     subtract(tn.cw, Seq("w"), "cw", dw)

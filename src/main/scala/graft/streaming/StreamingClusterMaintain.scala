@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -18,12 +17,12 @@ import graft.ops.TakedownOps
   * the readback against q51's OWN golden — from-scratch, batch-merge,
   * and streamed-merge closures are one contract.
   *
-  * Exactly-once: every processed doc leaves a cluster row (isolated
-  * docs label self), so the stored map's max doc_id IS the
-  * high-watermark — a redelivered batch filters itself to nothing, and
-  * anything above the watermark satisfies appendToClusters' own
-  * strictly-above freshness contract by construction (pinned by
-  * StreamingClusterMaintainSpec's wiped-checkpoint re-run).
+  * Exactly-once: the map's pinned historical max doc_id
+  * ([[graft.util.Tables.pinnedMaxDocId]]) is the high-watermark — a redelivered
+  * batch filters itself to nothing, and anything above the watermark
+  * satisfies appendToClusters' own strictly-above freshness contract
+  * by construction (pinned by StreamingClusterMaintainSpec's
+  * wiped-checkpoint re-run).
   */
 object StreamingClusterMaintain {
 
@@ -35,10 +34,7 @@ object StreamingClusterMaintain {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     TierStream.availableNow(spark, landingDir, checkpointDir, schema,
-        maxFilesPerTrigger) { batch =>
-      // watermark from the pinned table property (O(1) catalog metadata)
-      val wm = TakedownOps.pinnedMaxDocId(spark,
-        TakedownOps.clusterTables(prefix).clusters)
-      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-    } (TakedownOps.appendToClusters(spark, _, prefix))
+        maxFilesPerTrigger)(TierStream.aboveWatermark(spark,
+        TakedownOps.clusterTables(prefix).clusters))(
+      TakedownOps.appendToClusters(spark, _, prefix))
 }

@@ -19,11 +19,12 @@ import graft.ops.TakedownOps
   * canonical's row still leaves every surviving member pointing at a
   * doc that no longer exists; correctness requires the relabel, and
   * the relabel work is already O(batch + affected components). The
-  * known write-amplification bound is the table rewrite each batch
-  * commits (the bucket/cluster relations are unpartitioned managed
-  * parquet — a transactional format would commit the same logical
-  * delta as a delete file); the LABEL work, which is what scales with
-  * the corpus, stays component-local.
+  * known write-amplification bound is the rewrite each batch commits:
+  * both relations are partitioned into `pb` doc buckets, and every
+  * bucket holding a deleted or relabeled doc is rewritten whole (a
+  * transactional format would commit the same logical delta as a
+  * delete file); the LABEL work, which is what scales with the corpus,
+  * stays component-local.
   *
   * Exactly-once: deletion is idempotent — a redelivered batch
   * semi-joins against the stored map to nothing and the fold is

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -26,10 +25,11 @@ import graft.ops.TakedownOps
   * doc_id HIGH-WATERMARK the exact dedup key: rows at or below the
   * stored maximum have already been processed, so each micro-batch
   * drops them first and a fully-redelivered batch is a no-op. The
-  * watermark is the pars table's pinned max pid (docs that left no
-  * paragraphs reassemble to nothing and re-gate to a no-op, so missing
-  * them from the watermark is harmless — pinned by
-  * StreamingCuratedMaintainSpec's wiped-checkpoint re-run).
+  * watermark is the pars table's pinned historical max doc_id
+  * ([[graft.util.Tables.pinnedMaxDocId]]; docs that left no paragraphs reassemble
+  * to nothing and re-gate to a no-op, so missing them from the
+  * watermark is harmless — pinned by StreamingCuratedMaintainSpec's
+  * wiped-checkpoint re-run).
   */
 object StreamingCuratedMaintain {
 
@@ -41,11 +41,7 @@ object StreamingCuratedMaintain {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     TierStream.availableNow(spark, landingDir, checkpointDir, schema,
-        maxFilesPerTrigger) { batch =>
-      // watermark from the pinned max-pid property (O(1) catalog
-      // metadata); pid >> 20 recovers the owning doc_id
-      val wm = TakedownOps.pinnedMaxDocId(spark,
-        TakedownOps.curatedTables(prefix).pars) >> 20
-      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-    } (TakedownOps.appendToCurated(spark, _, prefix))
+        maxFilesPerTrigger)(TierStream.aboveWatermark(spark,
+        TakedownOps.curatedTables(prefix).pars))(
+      TakedownOps.appendToCurated(spark, _, prefix))
 }

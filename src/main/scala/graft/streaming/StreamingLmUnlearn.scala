@@ -38,7 +38,7 @@ object StreamingLmUnlearn {
 
   /** Drop a stale processed-ids relation from an earlier life of this
     * prefix — a leftover set would silently gate a fresh stream's
-    * deletions to nothing (the resetWatermark hazard, deletion-side).
+    * deletions to nothing.
     */
   def resetProcessed(spark: SparkSession, prefix: String): Unit =
     Tables.dropTable(spark, processedTable(prefix))

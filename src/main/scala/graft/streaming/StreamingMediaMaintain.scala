@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -21,9 +20,9 @@ import graft.ops.TakedownOps
   * SQL oracle: from-scratch, batch-append, and streamed-append media
   * dedup are one contract.
   *
-  * Exactly-once: every processed doc leaves an ownership row, so the
-  * stored keyed relation's max doc_id IS the high-watermark — the
-  * q371 self-watermarking argument, one tier over. A redelivered batch
+  * Exactly-once: the keyed relation's pinned historical max doc_id
+  * ([[graft.util.Tables.pinnedMaxDocId]]) is the high-watermark — the q371
+  * argument, one tier over. A redelivered batch
   * filters itself to nothing before any table is touched, and whatever
   * survives the filter satisfies appendToMedia's own strictly-above
   * freshness contract by construction (pinned by
@@ -39,10 +38,7 @@ object StreamingMediaMaintain {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     TierStream.availableNow(spark, landingDir, checkpointDir, schema,
-        maxFilesPerTrigger) { batch =>
-      // watermark from the pinned table property (O(1) catalog metadata)
-      val wm = TakedownOps.pinnedMaxDocId(spark,
-        TakedownOps.mediaTables(prefix).keyed)
-      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-    } (TakedownOps.appendToMedia(spark, _, prefix))
+        maxFilesPerTrigger)(TierStream.aboveWatermark(spark,
+        TakedownOps.mediaTables(prefix).keyed))(
+      TakedownOps.appendToMedia(spark, _, prefix))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -20,11 +19,10 @@ import graft.ops.CorpusStatsOps
   *
   * Exactly-once: appends are not idempotent (a redelivered batch would
   * double its docs' tf mass), so each micro-batch drops rows at or
-  * below the doc_id HIGH-WATERMARK read from the stored dl relation —
-  * every doc with at least one token leaves a dl row, and a doc with
-  * none writes nothing anywhere, so re-processing it is a no-op
-  * (pinned by StreamingSearchIndexMaintainSpec's wiped-checkpoint
-  * re-run).
+  * below the doc_id HIGH-WATERMARK pinned on the dl relation
+  * ([[graft.util.Tables.pinnedMaxDocId]]). The pin is historical: a doc taken
+  * down after it was appended stays down when its batch is redelivered
+  * (pinned by SearchIndexSpec's wiped-checkpoint re-runs).
   */
 object StreamingSearchIndexMaintain {
 
@@ -36,10 +34,7 @@ object StreamingSearchIndexMaintain {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     TierStream.availableNow(spark, landingDir, checkpointDir, schema,
-        maxFilesPerTrigger) { batch =>
-      val wmRow = spark.table(CorpusStatsOps.searchIndexTables(prefix).dl)
-        .agg(max(col("doc_id"))).head()
-      val wm = if (wmRow.isNullAt(0)) Long.MinValue else wmRow.getLong(0)
-      GraftBridge.checkpointOn(spark, batch.where(col("doc_id") > wm))
-    } (CorpusStatsOps.searchIndexAppend(spark, _, prefix))
+        maxFilesPerTrigger)(TierStream.aboveWatermark(spark,
+        CorpusStatsOps.searchIndexTables(prefix).dl))(
+      CorpusStatsOps.searchIndexAppend(spark, _, prefix))
 }

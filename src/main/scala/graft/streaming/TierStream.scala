@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.util.Tables
 
 /** The one skeleton of every streamed maintain, takedown and unlearn
   * tier: parquet files landed under `landingDir` are read as a stream,
@@ -46,4 +49,15 @@ object TierStream {
       .trigger(Trigger.AvailableNow())
       .start()
   }
+
+  /** The gate of the five doc tiers, whose exactly-once rule is one
+    * doc_id watermark: the batch rows above the historical max doc_id
+    * pinned on `pinnedTable` ([[Tables.pinnedMaxDocId]]), re-rooted on
+    * `spark`. A redelivered batch, or one a batch append already
+    * applied, leaves nothing; a table without the pin throws.
+    */
+  def aboveWatermark(spark: SparkSession, pinnedTable: String)(
+      batch: DataFrame): (DataFrame, Long) =
+    GraftBridge.checkpointOn(spark,
+      batch.where(col("doc_id") > Tables.pinnedMaxDocId(spark, pinnedTable)))
 }

@@ -1,15 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 /** Dev helper: time a subset of SparkEntry.queries on SPARK_GRAFT_SF_DIR. */
 object BenchSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       val t0 = System.nanoTime()

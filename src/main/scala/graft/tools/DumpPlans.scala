@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 
 /** Dev helper: capture `.explain("formatted")` for the named queries
   * (comma-separated) into <outDir>/<name>_<suffix>.txt — the
@@ -19,13 +19,7 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, namesArg) = args
     val names = namesArg.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     // NonFatal only, and a nonzero exit when any capture failed: a tool

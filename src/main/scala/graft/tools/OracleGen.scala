@@ -2,8 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
+
+import graft.util.LocalSession
 
 /** Generates the checked-in literal golden oracles
   * (src/main/resources/oracle/<query>.sql) for the deterministic
@@ -53,11 +54,7 @@ object OracleGen {
         s"unknown golden target(s): ${unknown.toSeq.sorted.mkString(",")}" +
           s" — known: ${targets.mkString(",")}")
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outBase))
 

@@ -1,15 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSession
 /** Dev helper: run a single SparkEntry query and show its result/plan. */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, dir)
     if (args.contains("--explain")) df.explain("formatted")

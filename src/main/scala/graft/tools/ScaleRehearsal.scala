@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.LocalSession
+
 /** Dev-only scale rehearsal (VERDICT r4 #8): the dedup/ANN/text family one
   * decade above the bench scale. Synthesizes a 10x documents+embeddings
   * corpus under /tmp from the sf0.1 tables — dup structure PRESERVED, not
@@ -439,12 +441,7 @@ object ScaleRehearsal {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (args.contains("--skew-only")) {

@@ -2,9 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.util.LocalSession
 
 /** Subset Verify for fast local iteration: dump only the named queries
   * (comma-separated, or a `qNNN` prefix filter) plus their oracle SQL,
@@ -19,13 +18,7 @@ object VerifySome {
     val selected = SparkEntry.all.filter(q =>
       wanted.contains(q.name) || wanted.exists(w => q.name.startsWith(w)))
     require(selected.nonEmpty, s"no queries match $namesArg")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { qd =>

@@ -1,10 +1,11 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** Table loaders plus oracle-safe money arithmetic.
+/** Table loaders, the metadata and writes of maintained tables, plus
+  * oracle-safe money arithmetic.
   *
   * Money values in the test data sit on a 2-decimal grid but are stored
   * as doubles. A double SUM is partition-order dependent, so every money
@@ -36,6 +37,65 @@ object Tables {
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), tbl)
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+  }
+
+  /** Replace every row of the managed table `tbl` by `rows`, matched by
+    * the table's column order. The table stays, and so do its
+    * properties (the [[pinnedMaxDocId]] pin among them); only a
+    * materialize drops a pinned table. `rows` must not read `tbl`:
+    * checkpoint them first.
+    */
+  def overwriteInPlace(spark: SparkSession, tbl: String, rows: DataFrame): Unit =
+    rows.select(spark.table(tbl).columns.map(col).toIndexedSeq: _*)
+      .write.mode(SaveMode.Overwrite).insertInto(tbl)
+
+  /** The exactly-once watermark of a maintained doc table: the highest
+    * doc_id its tier ever applied, kept as the table property
+    * `graft.maxDocId`, so it lives and dies with the table. It is
+    * HISTORICAL: a takedown never lowers it, so a redelivered batch
+    * cannot bring a deleted doc back, and an id reused after deletion
+    * is not fresh. Every materialize path pins it (Long.MinValue for an
+    * empty relation); a table without the pin was not written by this
+    * code, and what it already holds cannot be told: this throws.
+    */
+  def pinnedMaxDocId(spark: SparkSession, tbl: String): Long =
+    maxDocIdProperty(spark, tbl).getOrElse(throw new IllegalStateException(
+      s"$tbl has no graft.maxDocId property: it was not materialized by " +
+        "this code; rebuild it"))
+
+  /** Raise the [[pinnedMaxDocId]] watermark of `tbl` to `v`; a lower `v`
+    * leaves it as it is. */
+  def pinMaxDocId(spark: SparkSession, tbl: String, v: Long): Unit =
+    if (maxDocIdProperty(spark, tbl).forall(_ < v))
+      spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES('graft.maxDocId'='$v')")
+
+  private def maxDocIdProperty(spark: SparkSession, tbl: String): Option[Long] =
+    spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.maxDocId')")
+      .collect().headOption.map(_.getString(1))
+      .filter(s => s.nonEmpty && s.forall(c => c.isDigit || c == '-'))
+      .map(_.toLong)
+
+  /** The largest `doc_id` of `df`, Long.MinValue when it is empty: what a
+    * materialize path pins. */
+  def maxDocId(df: DataFrame): Long = {
+    val r = df.agg(max(col("doc_id"))).head()
+    if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
+  }
+
+  /** Add the distinct `key` values of `ids` to the presence set `tbl`
+    * (a tombstone table), skipping those it holds already, so a
+    * redelivered batch adds nothing. The set is created only from a
+    * non-empty batch: an empty set that exists would read as pending
+    * work to the tier that folds it.
+    */
+  def appendAbsent(spark: SparkSession, tbl: String, ids: DataFrame,
+      key: String): Unit = {
+    val distinctIds = ids.select(col(key)).distinct()
+    if (spark.catalog.tableExists(tbl))
+      distinctIds.join(spark.table(tbl), Seq(key), "left_anti")
+        .write.mode(SaveMode.Append).format("parquet").saveAsTable(tbl)
+    else if (!ids.isEmpty)
+      distinctIds.write.mode(SaveMode.Append).format("parquet").saveAsTable(tbl)
   }
 
   /** Exact money representation for aggregation. */

@@ -12,7 +12,8 @@ import graft.streaming.StreamingSearchIndexMaintain
   * postings + dl relations must score exactly like q245's inline
   * pipeline, appends must equal from-scratch indexing, a takedown must
   * shift idf/length normalization exactly like an index that never saw
-  * the deleted docs, and streamed redelivery must append nothing.
+  * the deleted docs, and streamed redelivery must append nothing, not
+  * even a doc taken down after its append.
   */
 class SearchIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -165,5 +166,17 @@ class SearchIndexSpec extends SparkSpec {
       "redelivered batches must not duplicate posting rows")
     assert(spark.table(tn.dl).count() === dlRows,
       "redelivered batches must not duplicate dl rows")
+
+    // physically take the highest streamed doc down, then redeliver
+    // every landed file again: the watermark is historical, so the doc
+    // must stay gone
+    val top = spark.table(tn.dl).agg(max(col("doc_id"))).head().getLong(0)
+    CorpusStatsOps.searchIndexTakedown(spark, Seq(top).toDF("doc_id"),
+      "graft_sispec5")
+    run(Files.createTempDirectory("graft-si-ckpt3").toString)
+    assert(spark.table(tn.dl).where(col("doc_id") === top).isEmpty &&
+      spark.table(tn.postings).where(col("doc_id") === top).isEmpty,
+      "a redelivered batch must not bring a taken-down doc back")
+    assert(spark.table(tn.dl).count() === dlRows - 1)
   }
 }

@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.{DedupOps, TakedownOps}
-import graft.streaming.StreamingClusterMaintain
+import graft.ops.{CorpusStatsOps, DedupOps, TakedownOps, VocabModelOps}
+import graft.streaming.{StreamingClusterMaintain, StreamingLmMaintain, StreamingSearchIndexMaintain}
 
 /** Streamed cluster-map maintenance (q371): per-micro-batch
   * component-local merges must equal the from-scratch transitive
@@ -59,19 +61,32 @@ class StreamingClusterMaintainSpec extends SparkSpec {
 
   test("a map without the pinned watermark fails the stream instead of scanning") {
     import spark.implicits._
-    val tn = TakedownOps.clusterTables("graft_clmlegacy")
-    spark.sql(s"DROP TABLE IF EXISTS ${tn.clusters}")
-    Seq((1L, 1L, 0)).toDF("doc_id", "cluster_id", "is_dup")
-      .write.format("parquet").saveAsTable(tn.clusters)
-    val landing = Files.createTempDirectory("graft-clmlegacy-landing").toString
-    Seq((2L, "a b c")).toDF("doc_id", "text").write.mode("append").parquet(landing)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamingClusterMaintain.maintainAvailableNow(spark, landing, "graft_clmlegacy",
-        Files.createTempDirectory("graft-clmlegacy-ckpt").toString,
-        StructType.fromDDL("doc_id BIGINT, text STRING")).awaitTermination(120000)
+    val schema = StructType.fromDDL("doc_id BIGINT, text STRING")
+    // each doc tier's gate table, written without the pin (a copy this
+    // code did not materialize), and the tier's stream over a landing
+    val tiers = Seq[(String, DataFrame, (String, String) => StreamingQuery)](
+      (TakedownOps.clusterTables("graft_clmlegacy").clusters,
+        Seq((1L, 1L, 0)).toDF("doc_id", "cluster_id", "is_dup"),
+        StreamingClusterMaintain.maintainAvailableNow(spark, _, "graft_clmlegacy", _, schema)),
+      (CorpusStatsOps.searchIndexTables("graft_silegacy").dl,
+        Seq((1L, 3L)).toDF("doc_id", "dl"),
+        StreamingSearchIndexMaintain.maintainAvailableNow(spark, _, "graft_silegacy", _, schema)),
+      (VocabModelOps.lmTables("graft_lmlegacy").c12,
+        Seq(("a", "b", 1L)).toDF("w1", "w2", "c12"),
+        StreamingLmMaintain.maintainAvailableNow(spark, _, "graft_lmlegacy", _, schema)))
+    tiers.foreach { case (tbl, rows, stream) =>
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      rows.write.format("parquet").saveAsTable(tbl)
+      val landing = Files.createTempDirectory("graft-legacy-landing").toString
+      Seq((2L, "a b c")).toDF("doc_id", "text").write.mode("append").parquet(landing)
+      val e = intercept[StreamingQueryException] {
+        stream(landing, Files.createTempDirectory("graft-legacy-ckpt").toString)
+          .awaitTermination(120000)
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("no graft.maxDocId property")),
+        s"$tbl: $e")
+      assert(spark.table(tbl).count() === 1, s"the legacy $tbl must be left as it was")
     }
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => String.valueOf(c.getMessage).contains("no graft.maxDocId property")), e)
-    assert(spark.table(tn.clusters).count() === 1, "the legacy map must be left as it was")
   }
 }

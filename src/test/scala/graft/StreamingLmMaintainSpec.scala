@@ -11,8 +11,9 @@ import graft.streaming.StreamingLmMaintain
 /** Streamed LM maintenance (q367): per-micro-batch count folds must
   * equal from-scratch training exactly, and a redelivered batch (wiped
   * checkpoint) must fold NOTHING — counts are not idempotent, so the
-  * exactly-once contract lives in the persisted doc_id high-watermark,
-  * not the checkpoint.
+  * exactly-once contract lives in the doc_id high-watermark pinned on
+  * the c12 relation, not the checkpoint. The pin is shared with the
+  * batch fold: a stream never re-counts docs a batch learn applied.
   */
 class StreamingLmMaintainSpec extends SparkSpec {
 
@@ -27,7 +28,6 @@ class StreamingLmMaintainSpec extends SparkSpec {
     val tn = VocabModelOps.lmTables("graft_lmsspec")
     VocabModelOps.lmMaterialize(spark,
       train.where(col("doc_id") <= cut), "graft_lmsspec")
-    StreamingLmMaintain.resetWatermark(spark, "graft_lmsspec")
 
     val tail = train.where(col("doc_id") > cut)
     val mid = docs.agg(expr("max(doc_id) * 9 div 10").as("t")).head()
@@ -56,6 +56,37 @@ class StreamingLmMaintainSpec extends SparkSpec {
     run(Files.createTempDirectory("graft-lms-ckpt2").toString)
     assert(spark.table(tn.c12).collect().toSet === r12.collect().toSet,
       "redelivered batches must not double-count any bigram")
+    assert(spark.table(tn.cw).count() === rv.head().getLong(0))
+  }
+
+  test("a stream over docs a batch fold already learned counts them once") {
+    val docs = graft.util.Tables.t(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    val train = docs.where(col("doc_id") % 2 === 0)
+    val cut = docs.agg(expr("max(doc_id) * 4 div 5").as("t")).head()
+      .getLong(0)
+    val mid = docs.agg(expr("max(doc_id) * 9 div 10").as("t")).head()
+      .getLong(0)
+    val tn = VocabModelOps.lmTables("graft_lmmix")
+    VocabModelOps.lmMaterialize(spark,
+      train.where(col("doc_id") <= cut), "graft_lmmix")
+    val tail = train.where(col("doc_id") > cut)
+    // the first slice is folded by a batch learn, then landed again
+    // together with the rest of the tail
+    VocabModelOps.learnLm(spark, tail.where(col("doc_id") <= mid),
+      "graft_lmmix")
+    val landing = Files.createTempDirectory("graft-lmmix-landing").toString
+    tail.where(col("doc_id") <= mid).coalesce(1)
+      .write.mode("append").parquet(landing)
+    tail.where(col("doc_id") > mid).coalesce(1)
+      .write.mode("append").parquet(landing)
+    StreamingLmMaintain.maintainAvailableNow(spark, landing, "graft_lmmix",
+      Files.createTempDirectory("graft-lmmix-ckpt").toString, schema,
+      maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+
+    val (r12, _, rv) = VocabModelOps.bigramModel(train)
+    assert(spark.table(tn.c12).collect().toSet === r12.collect().toSet,
+      "the batch-learned slice must not be counted again by the stream")
     assert(spark.table(tn.cw).count() === rv.head().getLong(0))
   }
 }
