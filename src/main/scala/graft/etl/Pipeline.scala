@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.SalesGen
 import graft.model.Sales._
+import graft.util.Tables
 import graft.util.Tables.{money, moneyAvg, moneySum}
 
 /** Medallion bronze→silver→gold pipeline (SURVEY §2.14). Reproduces the
@@ -64,40 +65,21 @@ object Pipeline {
       .partitionBy("order_date")
       .format("parquet").saveAsTable(table)
 
-  /** Dynamic partition overwrite — the idempotent daily-reprocess
-    * primitive at 100 TB: replace ONLY the date partitions present in
-    * `batch`, leaving every other partition's files untouched (static
-    * overwrite mode would truncate the whole table). Re-running the same
-    * batch is a no-op on the rest of the table, so a failed day can be
-    * replayed forever without touching history. PipelineSpec pins both
+  /** Partition overwrite — the idempotent daily-reprocess primitive at
+    * 100 TB: replace ONLY the date partitions present in `batch`,
+    * leaving every other partition's files untouched (a plain overwrite
+    * would truncate the whole table). Re-running the same batch is a
+    * no-op on the rest of the table, so a failed day can be replayed
+    * forever without touching history. PipelineSpec pins both
     * properties (untouched partitions survive byte-identically; replay
-    * is idempotent).
+    * is idempotent). The batch's distinct dates are collected to the
+    * driver: one value per day the batch covers.
     */
   def overwriteDayPartitions(spark: SparkSession, batch: DataFrame,
-      table: String = s"${silverTable}_bydate"): Unit = {
-    // Dynamic overwrite must not mutate the caller's session conf: a
-    // concurrent writer sharing the session could observe dynamic
-    // semantics it never asked for (or have its own dynamic mode
-    // reverted). The writer option `partitionOverwriteMode` does NOT
-    // work here — `insertInto` builds an InsertIntoStatement that
-    // carries no writer options (verified against Spark 4.1's
-    // DataFrameWriter bytecode; the option is honored only by
-    // path-based saves). So scope the conf to a CLONED session
-    // (`newSession`: own SQLConf, shared catalog/warehouse) and rebind
-    // the batch to it via its RDD — the one extra Row serialization is
-    // noise against a daily batch write.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // insertInto is positional (and rejects partitionBy): align the batch
-    // to the table's column order, partition column last
-    val cols = s2.table(table).columns
-    s2.createDataFrame(batch.rdd, batch.schema)
-      .select(cols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite).insertInto(table)
-    // the write refreshed s2's file-index cache, not the caller's —
-    // without this the caller's next scan can chase deleted file names
-    spark.catalog.refreshTable(table)
-  }
+      table: String = s"${silverTable}_bydate"): Unit =
+    Tables.replacePartitions(spark, table, "order_date",
+      batch.select(col("order_date")).distinct().collect().map(_.get(0)).toSeq,
+      batch)
 
   // ---- Quality suite C2: report-only, never drops rows (ref 01:168-206) ----
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryDef
+import graft.util.Tables
 import graft.util.Tables._
 
 /** Corpus-statistics operators a training-data pipeline runs between
@@ -899,11 +900,9 @@ object CorpusStatsOps {
     val tn = searchIndexTables(prefix)
     val del = broadcast(deletedDocs.select(col("doc_id")).distinct()
       .localCheckpoint(true))
-    Seq(tn.postings, tn.dl).foreach { tbl =>
-      overwriteInPlace(spark, tbl,
-        spark.table(tbl).join(del, Seq("doc_id"), "left_anti")
-          .localCheckpoint(true))
-    }
+    Seq(tn.postings, tn.dl).foreach(tbl =>
+      Tables.replace(spark, tbl,
+        spark.table(tbl).join(del, Seq("doc_id"), "left_anti")))
   }
 
   def searchTombTable(prefix: String): String = s"${prefix}_stomb"
@@ -939,8 +938,7 @@ object CorpusStatsOps {
       prefix: String): Unit = {
     val tt = searchTombTable(prefix)
     if (!spark.catalog.tableExists(tt)) return
-    val pending = spark.table(tt).localCheckpoint(true)
-    searchIndexTakedown(spark, pending, prefix)
+    searchIndexTakedown(spark, spark.table(tt), prefix)
     dropTable(spark, tt)
   }
 

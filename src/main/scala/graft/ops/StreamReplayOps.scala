@@ -3,9 +3,11 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.QueryDef
+import graft.util.Parallel.inParallel
 import graft.util.Tables.t
 
 /** Oracle-graded END-TO-END replays of streaming components (the q168
@@ -117,6 +119,21 @@ object StreamReplayOps {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** The streamed-tier replays' shared body: land `arrivals` as three
+    * `key`-ordered time slices under a fresh scratch base, then drain
+    * them through one tier's stream, `start(landing, checkpoint)`
+    * (which reads one file per trigger), under [[withReplayPartitions]].
+    */
+  private def replayTier(spark: SparkSession, tag: String,
+      arrivals: DataFrame, key: String)(
+      start: (String, String) => StreamingQuery): Unit = {
+    val base = replayScratchBase(tag)
+    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
+    landTimeSlices(spark, arrivals.withColumn("slice_key", col(key)),
+      nSlices = 3, landing, None)
+    withReplayPartitions(spark)(start(landing, ckpt).awaitTermination())
+  }
+
   /** Land a frame carrying an EXPLICIT `slice` column (dropped from the
     * output) as one file per slice value in [0, nSlices), plus an
     * optional flush frame as the strictly-latest file. Callers that need
@@ -151,17 +168,7 @@ object StreamReplayOps {
       (0 until nSlices).map(i =>
         i -> sliced.where(col("slice") === i).drop("slice")) ++
         flush.map(f => nSlices -> f).toSeq
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(4, parts.size))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = parts.map { case (i, p) =>
-        scala.concurrent.Future(writeOne(p, i))
-      }
-      futs.foreach(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    inParallel(spark, parts.map { case (i, p) => () => writeOne(p, i) })
     parts.foreach { case (i, _) => finishOne(i) }
   }
 
@@ -1336,21 +1343,15 @@ object StreamReplayOps {
     * StreamingAnnMaintainSpec's wiped-checkpoint re-run.
     */
   def annMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-annm-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val v = SimilarityOps.vectors(spark, dir)
     val baseSlice = v.where(col("vec_id") % 5 =!= 0)
     val delta = v.where(col("vec_id") % 5 === 0)
     AnnIndexOps.buildResidualIndex(spark, baseSlice, "graft_annmaint")
-    landTimeSlices(spark, delta.withColumn("slice_key", col("vec_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-annm-replay", delta, "vec_id")(
       graft.streaming.StreamingAnnMaintain.maintainAvailableNow(
-        spark, landing, "graft_annmaint", ckpt,
+        spark, _, "graft_annmaint", _,
         StructType.fromDDL("vec_id BIGINT, label INT, v ARRAY<DOUBLE>"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     AnnIndexOps.serveTopK(spark, SimilarityOps.queriesOf(v, 20),
       "graft_annmaint")
   }
@@ -1366,20 +1367,14 @@ object StreamReplayOps {
     * readers — plus redelivery idempotence and rebuild equivalence.
     */
   def annTakedownReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-anntd-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val v = SimilarityOps.vectors(spark, dir)
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anntdstream")
     val dels = v.where(col("vec_id") % 11 === 0).select(col("vec_id"))
-    landTimeSlices(spark, dels.withColumn("slice_key", col("vec_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-anntd-replay", dels, "vec_id")(
       graft.streaming.StreamingAnnTakedown.takedownAvailableNow(
-        spark, landing, "graft_anntdstream", ckpt,
+        spark, _, "graft_anntdstream", _,
         StructType.fromDDL("vec_id BIGINT"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     AnnIndexOps.applyTombstones(spark, "graft_anntdstream")
     AnnIndexOps.serveTopK(spark, SimilarityOps.queriesOf(v, 20),
       "graft_anntdstream")
@@ -1399,24 +1394,18 @@ object StreamReplayOps {
     * StreamingCuratedMaintainSpec's wiped-checkpoint re-run.
     */
   def curatedMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-cm-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val cut = docs.agg(expr("max(doc_id) * 4 div 5").as("t")).head()
       .getLong(0)
     TakedownOps.curatedMaterializeWithProvenance(spark,
       docs.where(col("doc_id") <= cut), "graft_cmstream")
-    landTimeSlices(spark, docs.where(col("doc_id") > cut)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-cm-replay", docs.where(col("doc_id") > cut),
+        "doc_id")(
       graft.streaming.StreamingCuratedMaintain.maintainAvailableNow(
-        spark, landing, "graft_cmstream", ckpt,
+        spark, _, "graft_cmstream", _,
         StructType.fromDDL("doc_id BIGINT, lang STRING, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     CurationOps.curatedCensusOf(spark.table("graft_cmstream_curated"))
   }
 
@@ -1434,8 +1423,6 @@ object StreamReplayOps {
     * pinned by StreamingLmMaintainSpec's wiped-checkpoint re-run.
     */
   def lmMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-lm-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val train = docs.where(col("doc_id") % 2 === 0)
@@ -1443,16 +1430,12 @@ object StreamReplayOps {
       .getLong(0)
     VocabModelOps.lmMaterialize(spark,
       train.where(col("doc_id") <= cut), "graft_lmstream")
-    landTimeSlices(spark, train.where(col("doc_id") > cut)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-lm-replay", train.where(col("doc_id") > cut),
+        "doc_id")(
       graft.streaming.StreamingLmMaintain.maintainAvailableNow(
-        spark, landing, "graft_lmstream", ckpt,
+        spark, _, "graft_lmstream", _,
         StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     VocabModelOps.scoreFromStored(spark,
       docs.where(col("doc_id") % 2 === 1), "graft_lmstream")
   }
@@ -1470,24 +1453,18 @@ object StreamReplayOps {
     */
   def searchIndexMaintainReplay(spark: SparkSession,
       dir: String): DataFrame = {
-    val base = replayScratchBase("graft-si-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val cut = docs.agg(expr("max(doc_id) * 4 div 5").as("t")).head()
       .getLong(0)
     CorpusStatsOps.searchIndexMaterialize(spark,
       docs.where(col("doc_id") <= cut), "graft_sistream")
-    landTimeSlices(spark, docs.where(col("doc_id") > cut)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-si-replay", docs.where(col("doc_id") > cut),
+        "doc_id")(
       graft.streaming.StreamingSearchIndexMaintain.maintainAvailableNow(
-        spark, landing, "graft_sistream", ckpt,
+        spark, _, "graft_sistream", _,
         StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     CorpusStatsOps.bm25FromStored(spark, CorpusStatsOps.Bm25Queries, 10,
       "graft_sistream")
   }
@@ -1504,24 +1481,18 @@ object StreamReplayOps {
     * StreamingClusterMaintainSpec's wiped-checkpoint re-run.
     */
   def clusterMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-clm-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val cut = docs.agg(expr("max(doc_id) * 4 div 5").as("t")).head()
       .getLong(0)
     TakedownOps.clustersMaterializeWithProvenance(spark,
       docs.where(col("doc_id") <= cut), "graft_clmstream")
-    landTimeSlices(spark, docs.where(col("doc_id") > cut)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-clm-replay", docs.where(col("doc_id") > cut),
+        "doc_id")(
       graft.streaming.StreamingClusterMaintain.maintainAvailableNow(
-        spark, landing, "graft_clmstream", ckpt,
+        spark, _, "graft_clmstream", _,
         StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     spark.table("graft_clmstream_clusters")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
       .orderBy("doc_id")
@@ -1541,23 +1512,17 @@ object StreamReplayOps {
     * StreamingMediaMaintainSpec's wiped-checkpoint re-run.
     */
   def mediaMaintainReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-mm-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"))
     val cut = docs.agg(expr("max(doc_id) * 4 div 5").as("t")).head()
       .getLong(0)
     TakedownOps.mediaMaterialize(spark,
       docs.where(col("doc_id") <= cut), "graft_mmstream")
-    landTimeSlices(spark, docs.where(col("doc_id") > cut)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-mm-replay", docs.where(col("doc_id") > cut),
+        "doc_id")(
       graft.streaming.StreamingMediaMaintain.maintainAvailableNow(
-        spark, landing, "graft_mmstream", ckpt,
+        spark, _, "graft_mmstream", _,
         StructType.fromDDL("doc_id BIGINT"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     spark.table("graft_mmstream_mclusters")
       .select(col("format"), col("width"), col("height"),
         col("resized_sum"), col("canonical_id"), col("n_members"))
@@ -1577,21 +1542,15 @@ object StreamReplayOps {
     * Held to q369's oracle: a full DuckDB rebuild on the survivors.
     */
   def searchTakedownReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-sitd-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     CorpusStatsOps.searchIndexMaterialize(spark, docs, "graft_sitdstream")
     val dels = docs.where(col("doc_id") % 13 === 0).select(col("doc_id"))
-    landTimeSlices(spark, dels.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-sitd-replay", dels, "doc_id")(
       graft.streaming.StreamingSearchIndexTakedown.takedownAvailableNow(
-        spark, landing, "graft_sitdstream", ckpt,
+        spark, _, "graft_sitdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     CorpusStatsOps.applySearchTombstones(spark, "graft_sitdstream")
     CorpusStatsOps.bm25FromStored(spark, CorpusStatsOps.Bm25Queries, 10,
       "graft_sitdstream")
@@ -1612,22 +1571,16 @@ object StreamReplayOps {
     * output. Redelivery idempotence is pinned by the spec.
     */
   def clusterTakedownReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-cltd-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     TakedownOps.clustersMaterializeWithProvenance(spark, docs,
       "graft_cltdstream")
     val dels = docs.where(col("doc_id") % 13 === 0).select(col("doc_id"))
-    landTimeSlices(spark, dels.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-cltd-replay", dels, "doc_id")(
       graft.streaming.StreamingClusterTakedown.takedownAvailableNow(
-        spark, landing, "graft_cltdstream", ckpt,
+        spark, _, "graft_cltdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     val swept = spark.table("graft_cltdstream_clusters")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
       .localCheckpoint(true)
@@ -1655,21 +1608,15 @@ object StreamReplayOps {
     * the deleted docs.
     */
   def mediaTakedownReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-mtd-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"))
     TakedownOps.mediaMaterialize(spark, docs, "graft_mtdstream")
     val dels = docs
       .where(col("doc_id") % 13 === 0 || col("doc_id") % 97 === 7)
-    landTimeSlices(spark, dels.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-mtd-replay", dels, "doc_id")(
       graft.streaming.StreamingMediaTakedown.takedownAvailableNow(
-        spark, landing, "graft_mtdstream", ckpt,
+        spark, _, "graft_mtdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     spark.table("graft_mtdstream_mclusters")
       .select(col("format"), col("width"), col("height"),
         col("resized_sum"), col("canonical_id"), col("n_members"))
@@ -1692,25 +1639,18 @@ object StreamReplayOps {
     * StreamingLmUnlearnSpec's wiped-checkpoint re-run.
     */
   def lmUnlearnReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-lmu-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val train = docs.where(col("doc_id") % 2 === 0)
     VocabModelOps.lmMaterialize(spark, train, "graft_lmustream")
     graft.streaming.StreamingLmUnlearn.resetProcessed(spark,
       "graft_lmustream")
-    landTimeSlices(spark,
-      train.where(col("doc_id") % 13 === 0)
-        .withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-lmu-replay",
+        train.where(col("doc_id") % 13 === 0), "doc_id")(
       graft.streaming.StreamingLmUnlearn.unlearnAvailableNow(
-        spark, landing, "graft_lmustream", ckpt,
+        spark, _, "graft_lmustream", _,
         StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1)))
     VocabModelOps.scoreFromStored(spark,
       docs.where(col("doc_id") % 2 === 1 && col("doc_id") % 13 =!= 0),
       "graft_lmustream")
@@ -1740,8 +1680,6 @@ object StreamReplayOps {
     */
   def annCensusSplitReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-anncs-replay")
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
     val v = SimilarityOps.vectors(spark, dir)
     val shifted = v
       .crossJoin(spark.range(3).select(col("id").as("copy")))
@@ -1752,15 +1690,11 @@ object StreamReplayOps {
         expr("transform(v, (x, i) -> 0.05D * x + IF(i = 0, 0.95D, 0D))")
           .as("v"))
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anncs_m")
-    landTimeSlices(spark, shifted.withColumn("slice_key", col("vec_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
+    replayTier(spark, "graft-anncs-replay", shifted, "vec_id")(
       graft.streaming.StreamingAnnMaintain.maintainAvailableNow(
-        spark, landing, "graft_anncs_m", ckpt,
+        spark, _, "graft_anncs_m", _,
         StructType.fromDDL("vec_id BIGINT, label INT, v ARRAY<DOUBLE>"),
-        maxFilesPerTrigger = Some(1), censusSplit = true)
-        .awaitTermination()
-    }
+        maxFilesPerTrigger = Some(1), censusSplit = true))
     // the unsplit twin: batch-append the same content, no repair (the
     // base build is a memo clone — one append-encode, not two fits)
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anncs_u")

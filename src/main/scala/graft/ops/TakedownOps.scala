@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
+import graft.util.Tables
 import graft.util.Tables._
 
 /** TAKEDOWN / right-to-be-forgotten sweep (q350) — the production
@@ -107,54 +108,6 @@ object TakedownOps {
     * fingerprint itself).
     */
   private def sigPart: Column = xxhash64(sigCols.map(col): _*)
-
-  /** Replace ONLY the given pb partitions of a bucket-partitioned table
-    * with `newRows` (which must carry every surviving row of those
-    * partitions, pb included): snapshot first (the replacement content
-    * must never be read through directories being dropped), drop the
-    * affected partition directories in place, append the snapshot, and
-    * refresh. Untouched buckets' data files never move — they are
-    * verbatim by construction, which is what bounds a maintenance
-    * batch's write cost by the affected buckets instead of the relation
-    * (the AnnIndexOps.splitOnce discipline; a full-relation
-    * reset+overwrite per micro-batch is O(corpus) write amplification
-    * at scale). Crash window (dirs dropped, append not yet committed):
-    * the affected buckets read empty until the maintenance re-runs —
-    * the same non-transactional bound every reset+overwrite here had,
-    * documented rather than hidden.
-    */
-  private def replaceBuckets(spark: SparkSession, tbl: String,
-      buckets: Seq[Int], newRows: DataFrame,
-      partCol: String = "pb"): Unit = {
-    if (buckets.isEmpty) return
-    val schema = spark.table(tbl).schema
-    val cols = schema.fieldNames.toSeq
-    // the snapshot is staged through the WAREHOUSE filesystem, not
-    // executor memory (VERDICT r17 #3 / guide §5): localCheckpoint pins
-    // blocks to executors, and on a real cluster an executor loss
-    // between the directory drops and the append would lose the only
-    // copy of the replacement rows while the old directories are
-    // already gone. A durable staging write costs one extra write+read
-    // of the affected buckets only, and the crash window narrows to
-    // "dirs dropped, append not committed" with the replacement rows
-    // still recoverable from the staging path. Clustered by the
-    // partition column so each rewritten directory gets ONE file per
-    // rewrite, not one per upstream task (guide §6).
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val stage = new org.apache.hadoop.fs.Path(
-      wh, s"_graft_staging/${tbl}_${java.util.UUID.randomUUID}")
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    newRows.select(cols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .save(stage.toString)
-    val snap = spark.read.schema(schema).parquet(stage.toString)
-    val loc = new org.apache.hadoop.fs.Path(wh, tbl)
-    buckets.foreach(b =>
-      fs.delete(new org.apache.hadoop.fs.Path(loc, s"$partCol=$b"), true))
-    snap.write.mode(SaveMode.Append).format("parquet").insertInto(tbl)
-    spark.catalog.refreshTable(tbl)
-    fs.delete(stage, true)
-  }
 
   /** The distinct pb values of a (small, localCheckpointed) id frame —
     * driver metadata bounded by the table's bucket count, the
@@ -377,16 +330,16 @@ object TakedownOps {
     // directories' files never move.
     val prB = bucketsOf(del.unionByName(candDocs.select(col("doc_id"))),
       "doc_id")
-    replaceBuckets(spark, tn.pars, prB,
+    Tables.replacePartitions(spark, tn.pars, "pb", prB,
       parsT.where(col("pb").isin(prB: _*))
         .join(del, Seq("doc_id"), "left_anti")
         .join(newVerdicts, Seq("pid"), "left")
         .withColumn("dup", coalesce(col("new_dup"), col("dup")))
         .drop("new_dup"))
     val bkB = bucketsOfKey(deletedPids, col("pid"))
-    replaceBuckets(spark, tn.buckets, bkB,
+    Tables.replacePartitions(spark, tn.buckets, "qb", bkB,
       bucketsT.where(col("qb").isin(bkB: _*))
-        .join(deletedPids, Seq("pid"), "left_anti"), "qb")
+        .join(deletedPids, Seq("pid"), "left_anti"))
     // curated repair: drop deleted + affected docs' old rows, insert
     // the affected docs' reassembled + re-gated rows (a previously
     // gated-out doc can re-enter when it regains paragraphs)
@@ -398,9 +351,8 @@ object TakedownOps {
       .join(del, Seq("doc_id"), "left_anti")
       .join(affectedDocs, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("text"), col("n_toks"))
-    replaceBuckets(spark, tn.curated, cuB,
-      withPart(keptIn.unionByName(repaired), col("doc_id"), "cb"),
-      "cb")
+    Tables.replacePartitions(spark, tn.curated, "cb", cuB,
+      withPart(keptIn.unionByName(repaired), col("doc_id"), "cb"))
   }
 
   /** q355 body: INCREMENTAL curated-corpus maintenance — the daily-
@@ -519,7 +471,8 @@ object TakedownOps {
     Seq(tn.clusters, tn.dbuckets).foreach(dropTable(spark, _))
     // pb-partitioned layout (VERDICT r16 #3): maintenance batches then
     // rewrite only the partition directories holding affected docs'
-    // rows instead of the whole relation — see [[replaceBuckets]]
+    // rows instead of the whole relation — see
+    // [[graft.util.Tables.replacePartitions]]
     saveTable(withPb(buckets, "doc_id"), tn.dbuckets, Seq("pb"))
     val (labels, _) = DedupOps.starComponentsWithRounds(
       edgesFromBuckets(spark.table(tn.dbuckets)))
@@ -568,10 +521,10 @@ object TakedownOps {
     val keptIn = clustersT.where(col("pb").isin(clB: _*))
       .join(affComps, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
-    replaceBuckets(spark, tn.clusters, clB,
+    Tables.replacePartitions(spark, tn.clusters, "pb", clB,
       withPb(keptIn.unionByName(relabeled), "doc_id"))
     val delB = bucketsOf(del, "doc_id")
-    replaceBuckets(spark, tn.dbuckets, delB,
+    Tables.replacePartitions(spark, tn.dbuckets, "pb", delB,
       bucketsT.where(col("pb").isin(delB: _*))
         .join(del, Seq("doc_id"), "left_anti"))
   }
@@ -675,7 +628,7 @@ object TakedownOps {
     val keptIn = clustersT.where(col("pb").isin(clB: _*))
       .join(affComps, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
-    replaceBuckets(spark, tn.clusters, clB,
+    Tables.replacePartitions(spark, tn.clusters, "pb", clB,
       withPb(keptIn.unionByName(relabeled), "doc_id"))
     pinMaxDocId(spark, tn.clusters, newStats.getLong(3))
   }
@@ -849,8 +802,8 @@ object TakedownOps {
     val keptIn = spark.table(tn.clusters).where(col("cb").isin(clB: _*))
       .join(affSigs, sigCols, "left_anti")
       .select((sigCols :+ "canonical_id" :+ "n_members").map(col): _*)
-    replaceBuckets(spark, tn.clusters, clB,
-      withPart(keptIn.unionByName(recomputed), sigPart, "cb"), "cb")
+    Tables.replacePartitions(spark, tn.clusters, "cb", clB,
+      withPart(keptIn.unionByName(recomputed), sigPart, "cb"))
   }
 
   /** Media-artifact takedown: delete the docs' ownership rows, retire
@@ -896,24 +849,24 @@ object TakedownOps {
       survKeyed.join(affSigRel.select(col("media_key")),
         Seq("media_key"), "left_semi"),
       affSigRel)
-    // surgical rewrites, most-derived first (each replacement snapshot
-    // is materialized before any directory moves): clusters — affected
+    // surgical rewrites, most-derived first (each replacement is staged
+    // before its partitions are dropped): clusters — affected
     // signature groups' buckets; sigs — retired keys' buckets; keyed —
     // deleted docs' buckets
     val clB = bucketsOfKey(affSigs, sigPart)
     val keptIn = spark.table(tn.clusters).where(col("cb").isin(clB: _*))
       .join(affSigs, sigCols, "left_anti")
       .select((sigCols :+ "canonical_id" :+ "n_members").map(col): _*)
-    replaceBuckets(spark, tn.clusters, clB,
-      withPart(keptIn.unionByName(recomputed), sigPart, "cb"), "cb")
+    Tables.replacePartitions(spark, tn.clusters, "cb", clB,
+      withPart(keptIn.unionByName(recomputed), sigPart, "cb"))
     val sgB = bucketsOf(deadKeys, "media_key")
-    replaceBuckets(spark, tn.sigs, sgB,
+    Tables.replacePartitions(spark, tn.sigs, "sb", sgB,
       sigsT.where(col("sb").isin(sgB: _*))
-        .join(deadKeys, Seq("media_key"), "left_anti"), "sb")
+        .join(deadKeys, Seq("media_key"), "left_anti"))
     val kdB = bucketsOf(del, "doc_id")
-    replaceBuckets(spark, tn.keyed, kdB,
+    Tables.replacePartitions(spark, tn.keyed, "pb", kdB,
       keyedT.where(col("pb").isin(kdB: _*))
-        .join(del, Seq("doc_id"), "left_anti"), "pb")
+        .join(del, Seq("doc_id"), "left_anti"))
   }
 
   /** q365 body: the takedown sweep extended to the MEDIA artifact tier

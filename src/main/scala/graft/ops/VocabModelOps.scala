@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
+import graft.util.Tables
 import graft.util.Tables._
 
 /** Vocabulary-model surface: character-n-gram language-model scoring
@@ -1148,8 +1149,7 @@ object VocabModelOps {
         .select((keys.map(col) :+
           (coalesce(col("a"), lit(0L)) + coalesce(col("d"), lit(0L)))
             .as(cnt)): _*)
-        .localCheckpoint(true)
-      overwriteInPlace(spark, tbl, updated)
+      Tables.replace(spark, tbl, updated)
     }
     add(tn.c12, Seq("w1", "w2"), "c12", d12)
     add(tn.cw, Seq("w"), "cw", dw)
@@ -1222,8 +1222,7 @@ object VocabModelOps {
         .select((keys.map(col) :+
           (col(cnt) - coalesce(col("d"), lit(0L))).as(cnt)): _*)
         .where(col(cnt) > 0)
-        .localCheckpoint(true)
-      overwriteInPlace(spark, tbl, updated)
+      Tables.replace(spark, tbl, updated)
     }
     subtract(tn.c12, Seq("w1", "w2"), "c12", d12)
     subtract(tn.cw, Seq("w"), "cw", dw)

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -39,15 +39,58 @@ object Tables {
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
-  /** Replace every row of the managed table `tbl` by `rows`, matched by
-    * the table's column order. The table stays, and so do its
-    * properties (the [[pinnedMaxDocId]] pin among them); only a
-    * materialize drops a pinned table. `rows` must not read `tbl`:
-    * checkpoint them first.
+  /** Replace every row of the managed table `tbl` by `rows`. The one
+    * in-place rewrite path of a stored table, with [[replacePartitions]]:
+    * the table stays, and so do its properties (the [[pinnedMaxDocId]]
+    * pin among them) and its partition and bucket spec; only a
+    * materialize drops a table. `rows` may read `tbl`: they are staged
+    * before any old file goes (see [[rewrite]]).
     */
-  def overwriteInPlace(spark: SparkSession, tbl: String, rows: DataFrame): Unit =
-    rows.select(spark.table(tbl).columns.map(col).toIndexedSeq: _*)
-      .write.mode(SaveMode.Overwrite).insertInto(tbl)
+  def replace(spark: SparkSession, tbl: String, rows: DataFrame): Unit =
+    rewrite(spark, tbl, rows, SaveMode.Overwrite)(())
+
+  /** Replace the partitions `partCol = v` (v in `values`) of the
+    * managed table `tbl` by `rows`, which may also land in partitions
+    * not named (they are appended). Every other partition's files stay
+    * as they are. With no `values` there is nothing to replace and the
+    * call does nothing.
+    */
+  def replacePartitions(spark: SparkSession, tbl: String, partCol: String,
+      values: Seq[Any], rows: DataFrame): Unit =
+    if (values.nonEmpty)
+      rewrite(spark, tbl, rows, SaveMode.Append)(spark.sql(
+        s"ALTER TABLE $tbl DROP IF EXISTS " + values.map(v =>
+          s"PARTITION ($partCol = '${v.toString.replace("'", "\\'")}')")
+          .mkString(", ")))
+
+  /** Align `rows` to the table's column order, write them to
+    * `<warehouse>/_graft_staging/<tbl>_<uuid>`, run `removeOld`, insert
+    * the staged rows (`mode` Overwrite removes the table's old rows in
+    * the same command, under the default static partition-overwrite
+    * mode), then delete the stage. The new rows are on durable storage
+    * before any old file is deleted: an executor lost in between loses
+    * no replacement row, and a rewrite that dies after the removal
+    * leaves them at the stage path. A bucketed table gets its rows
+    * clustered by the catalog's own bucket spec, one task per bucket,
+    * so a rewrite writes one file per (partition, bucket). The drop and
+    * the insert go through the catalog, which keeps its partitions and
+    * this session's relation cache current: no refresh is needed.
+    */
+  private def rewrite(spark: SparkSession, tbl: String, rows: DataFrame,
+      mode: SaveMode)(removeOld: => Unit): Unit = {
+    val aligned =
+      rows.select(spark.table(tbl).columns.map(col).toIndexedSeq: _*)
+    val stage = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"),
+      s"_graft_staging/${tbl}_${java.util.UUID.randomUUID}")
+    aligned.write.format("parquet").save(stage.toString)
+    val staged = spark.read.schema(aligned.schema).parquet(stage.toString)
+    removeOld
+    GraftBridge.bucketSpec(spark, tbl)
+      .fold(staged) { case (n, by) => staged.repartition(n, by.map(col): _*) }
+      .write.mode(mode).insertInto(tbl)
+    stage.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stage, true)
+  }
 
   /** The exactly-once watermark of a maintained doc table: the highest
     * doc_id its tier ever applied, kept as the table property

@@ -28,6 +28,14 @@ object GraftBridge {
   def applyInjectedFunctions(ext: SparkSessionExtensions, spark: SparkSession): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
 
+  /** The bucket count and bucket columns of the catalog table `tbl`,
+    * when it is bucketed. */
+  def bucketSpec(spark: SparkSession, tbl: String): Option[(Int, Seq[String])] = {
+    val state = spark.sessionState
+    state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(tbl))
+      .bucketSpec.map(b => (b.numBuckets, b.bucketColumnNames))
+  }
+
   /** Materialize `df` once and root the rows on `target`: one job
     * local-checkpoints the rows and counts them, all of them and those
     * for which the boolean `flag` holds, and the returned frame (`df`'s

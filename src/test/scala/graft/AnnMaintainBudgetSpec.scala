@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.ops.{AnnIndexOps, SimilarityOps}
 import graft.streaming.StreamingAnnMaintain
+import graft.util.Parallel
 
 /** What one streamed ANN maintenance operation costs the driver: Spark
   * jobs per 20-vector micro-batch and per serve, and code generation
@@ -18,7 +19,7 @@ import graft.streaming.StreamingAnnMaintain
   * a change that adds a job or brings back per-call compilation (a tier
   * body planned on the stream's cloned session recompiles every class
   * on every call) fails here before it shows in a benchmark. Also pins
-  * [[AnnIndexOps.inParallel]]'s failure contract.
+  * [[graft.util.Parallel.inParallel]]'s failure contract.
   */
 class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
 
@@ -94,7 +95,7 @@ class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
     val finished = new ConcurrentLinkedQueue[String]()
     val boom = new IllegalStateException("task 2 failed")
     val thrown = intercept[IllegalStateException] {
-      AnnIndexOps.inParallel(spark, Seq(
+      Parallel.inParallel(spark, Seq(
         () => { Thread.sleep(300); finished.add("task 1") },
         () => throw boom,
         () => { Thread.sleep(600); finished.add("task 3") }))
@@ -104,7 +105,7 @@ class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
       "both sibling tasks must have finished before the failure is rethrown")
 
     val first = intercept[RuntimeException] {
-      AnnIndexOps.inParallel(spark, Seq(
+      Parallel.inParallel(spark, Seq(
         () => { Thread.sleep(200); throw new RuntimeException("first") },
         () => throw new IllegalArgumentException("second")))
     }
@@ -115,7 +116,7 @@ class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
   test("inParallel bounds a call's concurrency and outlasts an interrupt of its caller") {
     val running = new AtomicInteger()
     val peak = new AtomicInteger()
-    AnnIndexOps.inParallel(spark, Seq.fill(6)(() => {
+    Parallel.inParallel(spark, Seq.fill(6)(() => {
       peak.accumulateAndGet(running.incrementAndGet(), math.max)
       Thread.sleep(100)
       running.decrementAndGet()
@@ -126,7 +127,7 @@ class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
     @volatile var finishedAtReturn = -1
     @volatile var interruptKept = false
     val caller = new Thread(() => {
-      AnnIndexOps.inParallel(spark,
+      Parallel.inParallel(spark,
         Seq.fill(2)(() => { Thread.sleep(500); finished.incrementAndGet() }))
       finishedAtReturn = finished.get
       interruptKept = Thread.currentThread().isInterrupted
@@ -144,7 +145,7 @@ class AnnMaintainBudgetSpec extends SparkSpec with DriverBudget {
     try {
       for (g <- Seq("graft-budget-a", "graft-budget-b")) {
         sc.setJobGroup(g, g)
-        val seen = AnnIndexOps.inParallel(spark,
+        val seen = Parallel.inParallel(spark,
           Seq.fill(3)(() => sc.getLocalProperty("spark.jobGroup.id")))
         assert(seen === Seq.fill(3)(g))
       }

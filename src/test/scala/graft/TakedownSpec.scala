@@ -667,9 +667,30 @@ class TakedownSpec extends SparkSpec {
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val pre = AnnIndexOps.serveTopK(spark, q, "graft_tdspecann").collect()
     val top1 = pre.find(_.getInt(1) == 1).get.getLong(2)
+    val data = Seq("graft_tdspecann_codes", "graft_tdspecann_vectors")
+    data.foreach(tbl =>
+      spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES('graft.spec'='kept')"))
+
+    // a batch appended and taken down again leaves the content as it
+    // was, but it adds data files to the cells it touched
+    val batch = v.where(col("vec_id") < 40)
+      .select((col("vec_id") + lit(9200000000L)).as("vec_id"), col("label"), col("v"))
+    AnnIndexOps.appendToIndex(spark, batch, "graft_tdspecann")
 
     AnnIndexOps.takedownIndex(spark, "graft_tdspecann",
-      Seq(top1).toDF("vec_id"))
+      Seq(top1).toDF("vec_id").unionByName(batch.select(col("vec_id"))))
+    // the rewrite keeps each table: a property set before it survives,
+    // and the layout is one data file per (cell, bucket) again
+    data.foreach { tbl =>
+      assert(spark.sql(s"SHOW TBLPROPERTIES $tbl ('graft.spec')")
+        .head().getString(1) === "kept", s"$tbl lost its properties")
+      val pairs = spark.table(tbl)
+        .select(col("cell"),
+          pmod(hash(col("vec_id")), lit(AnnIndexOps.IndexBuckets)))
+        .distinct().count()
+      assert(AnnIndexOps.indexDataFiles(spark, tbl) === pairs,
+        s"$tbl must hold one data file per (cell, bucket)")
+    }
     assert(spark.table("graft_tdspecann_codes")
       .where(col("vec_id") === top1).isEmpty)
     assert(spark.table("graft_tdspecann_vectors")
