@@ -671,14 +671,23 @@ class TakedownSpec extends SparkSpec {
     data.foreach(tbl =>
       spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES('graft.spec'='kept')"))
 
-    // a batch appended and taken down again leaves the content as it
-    // was, but it adds data files to the cells it touched
+    // an appended batch adds data files to the cells it touched; half
+    // of it is taken down, so the other half's survivors share their
+    // (cell, bucket) with the build's files
     val batch = v.where(col("vec_id") < 40)
       .select((col("vec_id") + lit(9200000000L)).as("vec_id"), col("label"), col("v"))
     AnnIndexOps.appendToIndex(spark, batch, "graft_tdspecann")
+    val kept = batch.where(col("vec_id") % 2 === 1)
 
-    AnnIndexOps.takedownIndex(spark, "graft_tdspecann",
-      Seq(top1).toDF("vec_id").unionByName(batch.select(col("vec_id"))))
+    // tiny read splits: the rewrite's input spans many tasks, so only a
+    // rewrite that clusters its rows by bucket lands one file per bucket
+    val splitKey = "spark.sql.files.maxPartitionBytes"
+    val split = spark.conf.getOption(splitKey)
+    spark.conf.set(splitKey, "1024")
+    try AnnIndexOps.takedownIndex(spark, "graft_tdspecann",
+      Seq(top1).toDF("vec_id")
+        .unionByName(batch.where(col("vec_id") % 2 === 0).select(col("vec_id"))))
+    finally split.fold(spark.conf.unset(splitKey))(spark.conf.set(splitKey, _))
     // the rewrite keeps each table: a property set before it survives,
     // and the layout is one data file per (cell, bucket) again
     data.foreach { tbl =>
@@ -696,7 +705,8 @@ class TakedownSpec extends SparkSpec {
     assert(spark.table("graft_tdspecann_vectors")
       .where(col("vec_id") === top1).isEmpty)
 
-    AnnIndexOps.rebuildWithFrozen(spark, v.where(col("vec_id") =!= top1),
+    AnnIndexOps.rebuildWithFrozen(spark,
+      v.where(col("vec_id") =!= top1).unionByName(kept),
       "graft_tdspecann", "graft_tdspecannrb")
     val codes = spark.table("graft_tdspecann_codes")
     val rbCodes = spark.table("graft_tdspecannrb_codes")
