@@ -1,12 +1,6 @@
 package graft
 import graft.util.LocalSession
 object Bench {
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession()
@@ -93,7 +87,7 @@ object Bench {
       (name, dt, mean, times.length, err)
     }
     def numMap(f: ((String, Double, Double, Int, Option[String])) => String): String =
-      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
+      results.map(r => Verify.q(r._1) + ":" + f(r)).mkString("{", ",", "}")
     val qs = numMap(_._2.toString)
     // min is the graded steady-state number; mean + rep count ride along
     // so cross-round comparisons can see cold/stall cost and how many
@@ -104,7 +98,7 @@ object Bench {
     val failed = results.collect { case (k, _, _, _, Some(msg)) => k -> msg }
     val errJson =
       if (failed.isEmpty) ""
-      else failed.map { case (k, m) => "\"" + k + "\":\"" + esc(m) + "\"" }
+      else failed.map { case (k, m) => Verify.q(k) + ":" + Verify.q(m) }
         .mkString(""","errors":{""", ",", "}")
     val total = results.collect { case (_, v, _, _, None) => v }.sum
     // echo the RESOLVED core count + master in every machine-readable
@@ -113,18 +107,18 @@ object Bench {
     // the artifacts alone (VERDICT r17 #6) — the env var still wins
     // when set, nothing about the timed region changes
     val envJson = s""""cpus":${LocalSession.cpus},"master":"local[${LocalSession.cpus}]""""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},$envJson$errJson,"queries":$qs,"means":$means,"reps":$reps,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},$envJson$errJson,"queries":$qs,"means":$means,"reps":$reps,"sf":${Verify.q(sfDir)}}""")
     // the driver captures only the TAIL of sbt output; with 160+ queries
     // the full line above can get truncated mid-map and lose the headline
     // (it happened to BENCH_r08). Repeat the short machine-readable
     // summary LAST so it always survives tail capture.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"nqueries":${results.size},$envJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"nqueries":${results.size},$envJson,"sf":${Verify.q(sfDir)}}""")
     // plan-audit targets must survive tail truncation too: one compact
     // line with just the top-20 slowest per-query means, emitted after
     // the summary so at worst the FULL map above is what gets cut
     val top20 = results.filter(_._5.isEmpty).sortBy(-_._3).take(20)
-      .map(r => "\"" + r._1 + "\":" + f"${r._3}%.3f").mkString("{", ",", "}")
-    println(s"""{"metric":"slowest20_mean_sec","queries":$top20,"sf":"$sfDir"}""")
+      .map(r => Verify.q(r._1) + ":" + f"${r._3}%.3f").mkString("{", ",", "}")
+    println(s"""{"metric":"slowest20_mean_sec","queries":$top20,"sf":${Verify.q(sfDir)}}""")
     // round-over-round regression check from the driver file alone: the
     // carried-over subtotal (every query up to the PREVIOUS round's max
     // number) survives tail truncation where the full per-query map does
@@ -140,7 +134,7 @@ object Bench {
     // carryOverMax is detectable from the driver files alone
     // (ADVICE r11: a silently wrong bound defeats the regression check)
     val setHash = carried.map(_._1).sorted.mkString(",").hashCode
-    println(s"""{"metric":"subtotal_upto","q":"q$carryOverMax","value":${carried.map(_._2).sum},"nqueries":${carried.length},"set_hash":$setHash,$envJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"subtotal_upto","q":"q$carryOverMax","value":${carried.map(_._2).sum},"nqueries":${carried.length},"set_hash":$setHash,$envJson,"sf":${Verify.q(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1247,7 +1247,7 @@ object AnnIndexOps {
       .where(col("m") <= col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_hits"))
       // right-join the grid so a k with zero hits still reports a row
-      .join(broadcast(kGrid), Seq("k"), "right")
+      .join(kGrid, Seq("k"), "right")
       .crossJoin(broadcast(nq))
       .select(col("k"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),

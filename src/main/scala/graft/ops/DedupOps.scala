@@ -374,8 +374,8 @@ object DedupOps {
     // first use nor leave cached frames registered after return. BOTH
     // tiers come off ONE checkpointed (doc_id, canonical_id, cluster_id)
     // frame — two separate checkpoints would pay two driver actions for
-    // frames sharing their whole oneHop+labels subtree, and on this host
-    // every extra tiny action is stall exposure (ProfileGate).
+    // frames sharing their whole oneHop+labels subtree, and every extra
+    // tiny driver action adds its scheduling latency to the query.
     // row set identical to [[minhashAssign]] but UNORDERED by default: the
     // gate consumer joins/aggregates only; q51 asks for its graded sort
     // via sortResult, paid lazily on top of the checkpointed base (no

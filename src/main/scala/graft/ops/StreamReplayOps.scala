@@ -1,12 +1,13 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 import graft.QueryDef
+import graft.streaming._
 import graft.util.Parallel.inParallel
 import graft.util.Tables.t
 
@@ -101,38 +102,79 @@ object StreamReplayOps {
     landBySlice(spark, sliced, nSlices, landingDir, flush)
   }
 
-  /** Run `body` with the stateful shuffle sized to the replay's data
-    * volume, restoring the session conf after. A stateful streaming
-    * operator materializes one-to-four state-store instances PER shuffle
-    * partition PER micro-batch; at the session's default partition count
-    * the store-commit overhead dwarfs the replay's data — sizing the
-    * shuffle is the same decision a production job makes when
-    * provisioning a stateful query. Queries run sequentially under
-    * Verify/Bench; the try/finally keeps any other caller safe. Partition
+  /** The replay conf: the stateful shuffle sized to the replay's data
+    * volume. A stateful streaming operator materializes one-to-four
+    * state-store instances PER shuffle partition PER micro-batch; at the
+    * session's default partition count the store-commit overhead dwarfs
+    * the replay's data — sizing the shuffle is the same decision a
+    * production job makes when provisioning a stateful query. Partition
     * count never affects results (all replay grades re-verify under it).
     */
-  private def withReplayPartitions[T](spark: SparkSession, n: Int = 8)(
+  private val ReplayPartitions = Map("spark.sql.shuffle.partitions" -> "8")
+
+  /** [[ReplayPartitions]] with the RocksDB state store, which the
+    * transformWithState components (timers, typed ValueState) require.
+    */
+  private val ReplayRocksDb = ReplayPartitions +
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Run `body` with `conf` set on the session, restoring each key's
+    * previous value (or unsetting it) after. Queries run sequentially
+    * under Verify/Bench; the try/finally keeps any other caller safe.
+    */
+  private def withConf[T](spark: SparkSession, conf: Map[String, String])(
       body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
+  /** The replay harness: make a fresh scratch base, `land` the arrivals
+    * under its landing dir, run `start(landing, out, checkpoint)` under
+    * [[withConf]], await the stream's termination and return `out`.
+    */
+  private def replay(spark: SparkSession, tag: String,
+      conf: Map[String, String] = ReplayPartitions)(land: String => Unit)(
+      start: (String, String, String) => StreamingQuery): String = {
+    val base = replayScratchBase(tag)
+    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
+    land(landing)
+    withConf(spark, conf)(start(landing, out, ckpt).awaitTermination())
+    out
+  }
+
+  /** The common landing: `df` as `nSlices` time slices of `key`, plus an
+    * optional flush frame ([[landTimeSlices]]).
+    */
+  private def timeSlices(spark: SparkSession, df: DataFrame, key: Column,
+      nSlices: Int, flush: Option[DataFrame] = None): String => Unit =
+    landTimeSlices(spark, df.withColumn("slice_key", key), nSlices, _, flush)
+
+  private val DocText = StructType.fromDDL("doc_id BIGINT, text STRING")
+  private val DocLangText =
+    StructType.fromDDL("doc_id BIGINT, lang STRING, text STRING")
+
+  /** A replay's landed slices as a stream, one file per trigger. */
+  private def slices(spark: SparkSession, landing: String,
+      schema: StructType): DataFrame =
+    Streams.landed(spark, landing, schema, maxFilesPerTrigger = Some(1))
+
   /** The streamed-tier replays' shared body: land `arrivals` as three
-    * `key`-ordered time slices under a fresh scratch base, then drain
-    * them through one tier's stream, `start(landing, checkpoint)`
-    * (which reads one file per trigger), under [[withReplayPartitions]].
+    * `key`-ordered time slices, then drain them through one tier's
+    * stream, `start(landing, checkpoint)`, which reads one file per
+    * trigger.
     */
   private def replayTier(spark: SparkSession, tag: String,
       arrivals: DataFrame, key: String)(
-      start: (String, String) => StreamingQuery): Unit = {
-    val base = replayScratchBase(tag)
-    val (landing, ckpt) = (s"$base/landing", s"$base/ckpt")
-    landTimeSlices(spark, arrivals.withColumn("slice_key", col(key)),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark)(start(landing, ckpt).awaitTermination())
-  }
+      start: (String, String) => StreamingQuery): Unit =
+    replay(spark, tag)(timeSlices(spark, arrivals, col(key), 3)) {
+      (landing, _, ckpt) => start(landing, ckpt)
+    }
 
   /** Land a frame carrying an EXPLICIT `slice` column (dropped from the
     * output) as one file per slice value in [0, nSlices), plus an
@@ -180,8 +222,6 @@ object StreamReplayOps {
     */
   def scd2Replay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-scd2-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("unix_millis(ts)").as("ts_ms"))
@@ -191,27 +231,17 @@ object StreamReplayOps {
       .crossJoin(broadcast(bounds))
       .select(col("user_id"), lit(Long.MaxValue / 2).as("event_id"),
         lit("__flush__").as("event_type"), flushMsCol.as("ts_ms"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_ms")),
-      nSlices = 4, landing, Some(flush))
-    val schema = Encoders.product[graft.streaming.StreamingScd2.ChangeEvent].schema
-    val changes = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .as[graft.streaming.StreamingScd2.ChangeEvent]
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingScd2(changes)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
+    val out = replay(spark, "graft-scd2-replay")(
+        timeSlices(spark, ev, col("ts_ms"), 4, Some(flush))) {
+      (landing, out, ckpt) =>
+        Streams.toParquet(StreamingScd2(slices(spark, landing,
+            Encoders.product[StreamingScd2.ChangeEvent].schema)
+          .as[StreamingScd2.ChangeEvent]), out, ckpt)
     }
     val flushStamp = bounds.select(
       date_format(timestamp_millis(flushMsCol), "yyyy-MM-dd HH:mm:ss")
         .as("flush_stamp"))
-    spark.read.schema(
-      Encoders.product[graft.streaming.StreamingScd2.ClosedVersion].schema)
+    spark.read.schema(Encoders.product[StreamingScd2.ClosedVersion].schema)
       .parquet(out)
       .crossJoin(broadcast(flushStamp))
       // no real event shares the sentinel's timestamp, so valid_to ==
@@ -234,23 +264,17 @@ object StreamReplayOps {
     * batch sessionization oracle.
     */
   def sessionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-sess-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
     val flush = ev.agg(max(col("ts")).as("mx"))
       .select(lit(-1L).as("user_id"), lit("__flush__").as("event_type"),
         lit(0.0).as("value"), (col("mx") + expr("INTERVAL 1 DAY")).as("ts"))
-    landTimeSlices(spark,
-      ev.withColumn("slice_key", expr("unix_millis(ts)")),
-      nSlices = 4, landing, Some(flush))
-    val schema = StructType.fromDDL(
-      "user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP")
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingSessionWindow.sessionAggAvailableNow(
-        spark, landing, out, ckpt, schema,
+    val out = replay(spark, "graft-sess-replay")(
+        timeSlices(spark, ev, expr("unix_millis(ts)"), 4, Some(flush))) {
+      StreamingSessionWindow.sessionAggAvailableNow(spark, _, _, _,
+        StructType.fromDDL(
+          "user_id BIGINT, event_type STRING, value DOUBLE, ts TIMESTAMP"),
         maxFilesPerTrigger = Some(1))
-        .awaitTermination()
     }
     spark.read.schema(StructType.fromDDL(
       "user_id BIGINT, session_start TIMESTAMP, session_end TIMESTAMP, " +
@@ -273,23 +297,16 @@ object StreamReplayOps {
     * hour × event_type grid, DECIMAL(18,4) money — relationally.
     */
   def windowReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-win-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("event_type"), col("value"), col("ts"))
     val flush = ev.agg(max(col("ts")).as("mx"))
       .select(lit("__flush__").as("event_type"), lit(0.0).as("value"),
         (col("mx") + expr("INTERVAL 1 DAY")).as("ts"))
-    landTimeSlices(spark,
-      ev.withColumn("slice_key", expr("unix_millis(ts)")),
-      nSlices = 4, landing, Some(flush))
-    val schema = StructType.fromDDL(
-      "event_type STRING, value DOUBLE, ts TIMESTAMP")
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingWindowedAgg.windowedAggAvailableNow(
-        spark, landing, out, ckpt, schema,
+    val out = replay(spark, "graft-win-replay")(
+        timeSlices(spark, ev, expr("unix_millis(ts)"), 4, Some(flush))) {
+      StreamingWindowedAgg.windowedAggAvailableNow(spark, _, _, _,
+        StructType.fromDDL("event_type STRING, value DOUBLE, ts TIMESTAMP"),
         maxFilesPerTrigger = Some(1))
-        .awaitTermination()
     }
     spark.read.schema(StructType.fromDDL(
       "window_start TIMESTAMP, window_end TIMESTAMP, event_type STRING, " +
@@ -315,30 +332,17 @@ object StreamReplayOps {
     */
   def lastTouchReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-touch-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("ts_us"), col("event_type"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_us")),
-      nSlices = 4, landing, None)
-    val schema =
-      Encoders.product[graft.streaming.StreamingLastTouch.TouchEvent].schema
-    val touches = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .as[graft.streaming.StreamingLastTouch.TouchEvent]
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingLastTouch.attribute(touches)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
+    val out = replay(spark, "graft-touch-replay")(
+        timeSlices(spark, ev, col("ts_us"), 4)) { (landing, out, ckpt) =>
+      Streams.toParquet(StreamingLastTouch.attribute(
+        slices(spark, landing,
+          Encoders.product[StreamingLastTouch.TouchEvent].schema)
+          .as[StreamingLastTouch.TouchEvent]), out, ckpt)
     }
-    spark.read.schema(
-      Encoders.product[graft.streaming.StreamingLastTouch.Attribution].schema)
+    spark.read.schema(Encoders.product[StreamingLastTouch.Attribution].schema)
       .parquet(out)
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_purchases"),
@@ -358,8 +362,6 @@ object StreamReplayOps {
     */
   def inactivityReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-ia-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), expr("unix_millis(ts)").as("ts_ms"))
     val b = ev.agg(min(col("ts_ms")).as("mn"), max(col("ts_ms")).as("mx")).head()
@@ -367,34 +369,19 @@ object StreamReplayOps {
     val gapMs = (mx - mn) + 86400000L
     val flush = spark.range(1)
       .select(lit(-1L).as("user_id"), lit(mx + gapMs + 86400000L).as("ts_ms"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_ms")),
-      nSlices = 4, landing, Some(flush))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withReplayPartitions(spark) {
-      val seen = spark.readStream
-        .schema("user_id BIGINT, ts_ms BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .select(expr("timestamp_millis(ts_ms)").as("ts"), col("user_id"))
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), expr("unix_millis(ts)").as("ts_ms"))
-        .as[graft.streaming.StreamingInactivity.Seen]
-      graft.streaming.StreamingInactivity.churnFlags(seen, gapMs)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val out = replay(spark, "graft-ia-replay", ReplayRocksDb)(
+        timeSlices(spark, ev, col("ts_ms"), 4, Some(flush))) {
+      (landing, out, ckpt) =>
+        val seen = slices(spark, landing,
+            StructType.fromDDL("user_id BIGINT, ts_ms BIGINT"))
+          .select(expr("timestamp_millis(ts_ms)").as("ts"), col("user_id"))
+          .withWatermark("ts", "0 seconds")
+          .select(col("user_id"), expr("unix_millis(ts)").as("ts_ms"))
+          .as[StreamingInactivity.Seen]
+        Streams.toParquet(StreamingInactivity.churnFlags(seen, gapMs), out,
+          ckpt)
     }
-    spark.read.schema(
-      Encoders.product[graft.streaming.StreamingInactivity.Churned].schema)
+    spark.read.schema(Encoders.product[StreamingInactivity.Churned].schema)
       .parquet(out)
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("last_seen_ms"), col("deadline_ms"))
@@ -416,8 +403,6 @@ object StreamReplayOps {
     * any dropped original breaks the counts.
     */
   def dedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-dedup-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val nSlices = 4
     val ev = EventOps.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
@@ -432,19 +417,15 @@ object StreamReplayOps {
     val originals = ev.withColumn("slice", sliceOf)
     val redeliveries = ev.where(col("user_id") % 7 === 0)
       .withColumn("slice", sliceOf + 1) // one batch AFTER the original
-    landBySlice(spark, originals.unionByName(redeliveries),
-      nSlices + 1, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingDedup.dedupAvailableNow(
-        spark, landing, out, ckpt,
-        StructType.fromDDL("event_id BIGINT, user_id BIGINT, " +
-          "event_type STRING, value DOUBLE, ts TIMESTAMP"),
-        tsCol = "ts", delay = s"$delayMs milliseconds",
-        keys = Seq("event_id"))
-        .awaitTermination()
+    val schema = StructType.fromDDL("event_id BIGINT, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, ts TIMESTAMP")
+    val out = replay(spark, "graft-dedup-replay")(
+        landBySlice(spark, originals.unionByName(redeliveries), nSlices + 1,
+          _, None)) {
+      StreamingDedup.dedupAvailableNow(spark, _, _, _, schema,
+        tsCol = "ts", delay = s"$delayMs milliseconds", keys = Seq("event_id"))
     }
-    spark.read.schema(StructType.fromDDL("event_id BIGINT, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, ts TIMESTAMP"))
+    spark.read.schema(schema)
       .parquet(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -467,32 +448,21 @@ object StreamReplayOps {
     * Graded against the relational interval join over the same events.
     */
   def intervalJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-ij-replay")
-    val (landV, landC, out, ckpt) =
-      (s"$base/views", s"$base/clicks", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-    def land(kind: String, dirOut: String): Unit =
-      landTimeSlices(spark,
-        ev.where(col("event_type") === kind)
-          .select(col("user_id"), col("event_id"), col("ts"))
-          .withColumn("slice_key", expr("unix_millis(ts)")),
-        nSlices = 4, dirOut, None)
-    land("view", landV)
-    land("click", landC)
+    def side(kind: String): String => Unit =
+      timeSlices(spark, ev.where(col("event_type") === kind)
+        .select(col("user_id"), col("event_id"), col("ts")),
+        expr("unix_millis(ts)"), 4)
     val schema = StructType.fromDDL(
       "user_id BIGINT, event_id BIGINT, ts TIMESTAMP")
-    def read(dirIn: String) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dirIn)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingIntervalJoin.attribute(read(landV), read(landC),
-        horizon = "2 hours")
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
+    val out = replay(spark, "graft-ij-replay") { landing =>
+      side("view")(s"$landing/views"); side("click")(s"$landing/clicks")
+    } { (landing, out, ckpt) =>
+      Streams.toParquet(StreamingIntervalJoin.attribute(
+        slices(spark, s"$landing/views", schema),
+        slices(spark, s"$landing/clicks", schema), horizon = "2 hours"),
+        out, ckpt)
     }
     spark.read.schema(StructType.fromDDL(
       "user_id BIGINT, view_id BIGINT, click_id BIGINT, " +
@@ -519,14 +489,11 @@ object StreamReplayOps {
     * LEFT JOIN over the same events — row-for-row, nulls included.
     */
   def leftOuterJoinReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-loj-replay")
-    val (landV, landC, out, ckpt) =
-      (s"$base/views", s"$base/clicks", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
     val flushTs = ev.agg((max(col("ts")) + expr("INTERVAL 1 DAY")).as("fts"))
-    def land(kind: String, dirOut: String, flushUser: Long): Unit = {
-      val side = ev.where(col("event_type") === kind)
+    def side(kind: String, flushUser: Long): String => Unit = {
+      val rows = ev.where(col("event_type") === kind)
         .select(col("user_id"), col("event_id"), col("ts"))
       val flush = flushTs.select(lit(flushUser).as("user_id"),
         lit(-1L).as("event_id"), col("fts").as("ts"))
@@ -537,25 +504,18 @@ object StreamReplayOps {
       // >= 2 batches per side, watermark-driven eviction, and the
       // flush drain. Output is row-identical at any slicing (the
       // oracle is the relational LEFT JOIN).
-      landTimeSlices(spark,
-        side.withColumn("slice_key", expr("unix_millis(ts)")),
-        nSlices = 2, dirOut, Some(flush))
+      timeSlices(spark, rows, expr("unix_millis(ts)"), 2, Some(flush))
     }
-    land("view", landV, flushUser = -1L)
-    land("click", landC, flushUser = -2L)
     val schema = StructType.fromDDL(
       "user_id BIGINT, event_id BIGINT, ts TIMESTAMP")
-    def read(dirIn: String) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(dirIn)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingIntervalJoin.attributeLeftOuter(
-        read(landV), read(landC), horizon = "2 hours")
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
+    val out = replay(spark, "graft-loj-replay") { landing =>
+      side("view", flushUser = -1L)(s"$landing/views")
+      side("click", flushUser = -2L)(s"$landing/clicks")
+    } { (landing, out, ckpt) =>
+      Streams.toParquet(StreamingIntervalJoin.attributeLeftOuter(
+        slices(spark, s"$landing/views", schema),
+        slices(spark, s"$landing/clicks", schema), horizon = "2 hours"),
+        out, ckpt)
     }
     spark.read.schema(StructType.fromDDL(
       "user_id BIGINT, view_id BIGINT, click_id BIGINT, " +
@@ -586,8 +546,6 @@ object StreamReplayOps {
     */
   def statefulSessionReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-fsess-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"),
         (col("value").cast("decimal(18,6)") * 1000000)
@@ -597,21 +555,15 @@ object StreamReplayOps {
       .crossJoin(broadcast(bounds))
       .select(col("user_id"), (col("mx") + lit(86400000000L)).as("ts_us"),
         lit(0.0).as("value"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_us")),
-      nSlices = 4, landing, Some(flush))
-    val stream = spark.readStream
-      .schema("user_id LONG, ts_us LONG, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .as[graft.streaming.StatefulSessions.SessionEvent]
-    withReplayPartitions(spark) {
-      graft.streaming.StatefulSessions.sessionize(stream, gapUs = 30L * 60 * 1000000)
-        .writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(out)
-        .awaitTermination()
+    val out = replay(spark, "graft-fsess-replay")(
+        timeSlices(spark, ev, col("ts_us"), 4, Some(flush))) {
+      (landing, out, ckpt) =>
+        val stream = slices(spark, landing,
+            StructType.fromDDL("user_id LONG, ts_us LONG, value DOUBLE"))
+          .as[StatefulSessions.SessionEvent]
+        Streams.toParquet(
+          StatefulSessions.sessionize(stream, gapUs = 30L * 60 * 1000000),
+          out, ckpt)
     }
     spark.read.schema(StructType.fromDDL(
       "user_id BIGINT, session_start STRING, n_events BIGINT, " +
@@ -638,53 +590,21 @@ object StreamReplayOps {
     */
   def userStatsReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-ustats-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         round(col("value") * 100, 0).cast("long").as("cents"),
         expr("unix_micros(ts)").as("ts_us"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_us")),
-      nSlices = 4, landing, None)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withReplayPartitions(spark) {
-      val stream = spark.readStream
-        .schema("user_id LONG, event_type STRING, cents LONG, ts_us LONG")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    val out = replay(spark, "graft-ustats-replay", ReplayRocksDb)(
+        timeSlices(spark, ev, col("ts_us"), 4)) { (landing, out, ckpt) =>
+      val stream = slices(spark, landing, StructType.fromDDL(
+          "user_id LONG, event_type STRING, cents LONG, ts_us LONG"))
         .select("user_id", "event_type", "cents")
-        .as[graft.streaming.StreamingUserStats.UserEvent]
-      graft.streaming.StreamingUserStats.profile(stream)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[
-            graft.streaming.StreamingUserStats.UserStats], id: Long) =>
-            batch.withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(out)
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(graft.streaming.StreamingUserStats.outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+        .as[StreamingUserStats.UserEvent]
+      Streams.stamped(StreamingUserStats.profile(stream), out, ckpt,
+        StreamingUserStats.outputMode)(_.toDF())
     }
-    spark.read.schema(StructType.fromDDL(
-      "user_id BIGINT, n_events BIGINT, total_cents BIGINT, " +
-        "n_purchases BIGINT, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("user_id")
-      .agg(expr("max_by(struct(n_events, total_cents, n_purchases), batch_id)")
-        .as("s"))
-      .select(col("user_id"), col("s.n_events").as("n_events"),
-        col("s.total_cents").as("total_cents"),
-        col("s.n_purchases").as("n_purchases"))
+    Streams.latest(spark, out, "user_id BIGINT, n_events BIGINT, " +
+        "total_cents BIGINT, n_purchases BIGINT", "user_id")
       .orderBy("user_id")
   }
 
@@ -698,36 +618,26 @@ object StreamReplayOps {
     */
   def enrichmentReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-enrich-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val ev = EventOps.events(spark, dir)
       .select(
         concat(lit("ch"),
           get_json_object(col("props"), "$.k").cast("int") % 5).as("category"),
         lit(1L).as("quantity"), col("value").as("price"),
         expr("unix_micros(ts)").as("ts_us"))
-    landTimeSlices(spark, ev.withColumn("slice_key", col("ts_us")),
-      nSlices = 4, landing, None)
     val dim = Seq("ch0" -> "grp_even", "ch1" -> "grp_odd",
       "ch2" -> "grp_even", "ch3" -> "grp_odd", "ch4" -> "grp_even")
       .toDF("category", "macro_category")
-    val stream = spark.readStream
-      .schema("category STRING, quantity LONG, price DOUBLE, ts_us LONG")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .drop("ts_us")
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingEnrichment.macroRevenue(
-        graft.streaming.StreamingEnrichment.enrich(stream, dim))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out); ()
+    val out = replay(spark, "graft-enrich-replay")(
+        timeSlices(spark, ev, col("ts_us"), 4)) { (landing, out, ckpt) =>
+      val stream = slices(spark, landing, StructType.fromDDL(
+          "category STRING, quantity LONG, price DOUBLE, ts_us LONG"))
+        .drop("ts_us")
+      // complete mode re-emits the whole aggregate: the last batch wins
+      Streams.foreachBatch(StreamingEnrichment.macroRevenue(
+          StreamingEnrichment.enrich(stream, dim)), ckpt,
+          OutputMode.Complete()) { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
       }
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
     }
     spark.read.schema(
       StructType.fromDDL("macro_category STRING, revenue DOUBLE"))
@@ -743,38 +653,16 @@ object StreamReplayOps {
     */
   def termCountsReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-tc-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
-    landTimeSlices(spark, docs.withColumn("slice_key", col("doc_id")),
-      nSlices = 4, landing, None)
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .select(col("text")).as[String]
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingTermCounts.countTerms(
-        graft.streaming.StreamingTermCounts.tokenDeltas(stream))
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[
-          graft.streaming.StreamingTermCounts.TermTotal], id: Long) =>
-          batch.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(out)
-          ()
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode(graft.streaming.StreamingTermCounts.outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    val out = replay(spark, "graft-tc-replay")(
+        timeSlices(spark, docs, col("doc_id"), 4)) { (landing, out, ckpt) =>
+      val stream = slices(spark, landing, DocText)
+        .select(col("text")).as[String]
+      Streams.stamped(
+        StreamingTermCounts.countTerms(StreamingTermCounts.tokenDeltas(stream)),
+        out, ckpt, StreamingTermCounts.outputMode)(_.toDF())
     }
-    spark.read.schema(StructType.fromDDL(
-      "term STRING, total BIGINT, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("term")
-      .agg(expr("max_by(total, batch_id)").as("total"))
+    Streams.latest(spark, out, "term STRING, total BIGINT", "term")
       .orderBy("term")
   }
 
@@ -790,18 +678,14 @@ object StreamReplayOps {
     */
   def incrDedupReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-idd-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
     val existing = docs.where(col("doc_id") % 10 =!= 0)
     val delta = docs.where(col("doc_id") % 10 === 0)
-    landTimeSlices(spark, delta.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    graft.streaming.StreamingIncrementalDedup.flagAvailableNow(
-      spark, landing, existing, out, ckpt,
-      StructType.fromDDL("doc_id BIGINT, text STRING"),
-      maxFilesPerTrigger = Some(1))
-      .awaitTermination()
+    val out = replay(spark, "graft-idd-replay", conf = Map.empty)(
+        timeSlices(spark, delta, col("doc_id"), 3)) {
+      StreamingIncrementalDedup.flagAvailableNow(spark, _, existing, _, _,
+        DocText, maxFilesPerTrigger = Some(1))
+    }
     val streamed = spark.read.schema(StructType.fromDDL(
       "doc_id BIGINT, matched_id BIGINT, is_known_dup INT, batch_id BIGINT"))
       .parquet(out)
@@ -825,22 +709,20 @@ object StreamReplayOps {
     */
   def ingestReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-ingest-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val n = 2000
     val bronze = graft.gen.SalesGen.initialBatch(spark, n = n).toDF()
-    landTimeSlices(spark,
-      bronze.withColumn("slice_key",
-        expr("CAST(substring(order_id, 5) AS BIGINT)")),
-      nSlices = 4, landing, None)
-    graft.streaming.StreamingIngest.silverAvailableNow(spark, landing, out, ckpt)
-      .awaitTermination()
-    val afterFirst = spark.read.parquet(out)
-    val firstCount = afterFirst.count()
-    // rerun with the same checkpoint and no new files: exactly-once means
-    // zero additional rows
-    graft.streaming.StreamingIngest.silverAvailableNow(spark, landing, out, ckpt)
-      .awaitTermination()
+    var firstCount = 0L
+    val out = replay(spark, "graft-ingest-replay", conf = Map.empty)(
+        timeSlices(spark, bronze,
+          expr("CAST(substring(order_id, 5) AS BIGINT)"), 4)) {
+      (landing, out, ckpt) =>
+        StreamingIngest.silverAvailableNow(spark, landing, out, ckpt)
+          .awaitTermination()
+        firstCount = spark.read.parquet(out).count()
+        // the rerun, with the same checkpoint and no new files:
+        // exactly-once means zero additional rows
+        StreamingIngest.silverAvailableNow(spark, landing, out, ckpt)
+    }
     val streamed = spark.read.parquet(out)
     val batchRef = graft.etl.Pipeline.silverTransform(bronze)
     val matches = streamed.exceptAll(batchRef).isEmpty &&
@@ -861,38 +743,18 @@ object StreamReplayOps {
   def cmsReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (depth, width) = (4, 1024)
-    val base = replayScratchBase("graft-cms-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
-    landTimeSlices(spark, docs.withColumn("slice_key", col("doc_id")),
-      nSlices = 4, landing, None)
-    val stream = spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landing)
-      .select(col("text")).as[String]
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingCms.foldCells(
-        graft.streaming.StreamingCms.cellDeltas(stream, depth, width))
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[
-          graft.streaming.StreamingCms.CellTotal], id: Long) =>
-          batch.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(out)
-          ()
-      }
-      .option("checkpointLocation", ckpt)
-      .outputMode(graft.streaming.StreamingCms.outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    val out = replay(spark, "graft-cms-replay")(
+        timeSlices(spark, docs, col("doc_id"), 4)) { (landing, out, ckpt) =>
+      val stream = slices(spark, landing, DocText)
+        .select(col("text")).as[String]
+      Streams.stamped(
+        StreamingCms.foldCells(StreamingCms.cellDeltas(stream, depth, width)),
+        out, ckpt, StreamingCms.outputMode)(_.toDF())
     }
-    val sketch = spark.read.schema(StructType.fromDDL(
-      "row INT, cell BIGINT, total BIGINT, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("row", "cell")
-      .agg(expr("max_by(total, batch_id)").as("cnt"))
+    val sketch = Streams.latest(spark, out,
+        "row INT, cell BIGINT, total BIGINT", "row", "cell")
+      .withColumnRenamed("total", "cnt")
     val terms = docs.where(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("term"))
       .where(col("term") =!= "")
@@ -924,26 +786,17 @@ object StreamReplayOps {
     * read idempotent under the sink's at-least-once appends.
     */
   def centroidAssignReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-ca-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val emb = t(spark, dir, "embeddings")
     val static = emb.where(col("vec_id") % 5 =!= 0)
     val delta = emb.where(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("embedding"))
-    landTimeSlices(spark, delta.withColumn("slice_key", col("vec_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingCentroidAssign.assignAvailableNow(
-        spark, landing, static, out, ckpt,
+    val out = replay(spark, "graft-ca-replay")(
+        timeSlices(spark, delta, col("vec_id"), 3)) {
+      StreamingCentroidAssign.assignAvailableNow(spark, _, static, _, _,
         StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>"),
         maxFilesPerTrigger = Some(1))
-        .awaitTermination()
     }
-    spark.read.schema(StructType.fromDDL(
-        "vec_id BIGINT, cl INT, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("vec_id")
-      .agg(expr("max_by(cl, batch_id)").as("cl"))
+    Streams.latest(spark, out, "vec_id BIGINT, cl INT", "vec_id")
       .groupBy(col("cl").as("label"))
       .agg(count(lit(1)).as("n_assigned"))
       .orderBy("label")
@@ -993,54 +846,27 @@ object StreamReplayOps {
     */
   def topkReplay(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = replayScratchBase("graft-topk-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val orders = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    landTimeSlices(spark, orders.withColumn("slice_key", col("o_orderkey")),
-      nSlices = 4, landing, None)
     val segments = t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withReplayPartitions(spark) {
-      val stream = spark.readStream
-        .schema("o_orderkey LONG, o_custkey LONG, o_totalprice DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .join(broadcast(segments), col("o_custkey") === col("c_custkey"))
-        .select(col("segment"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"),
-          col("o_orderkey"))
-        .as[graft.streaming.StreamingTopK.OrderRow]
-      graft.streaming.StreamingTopK.topkPerSegment(stream)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[
-            graft.streaming.StreamingTopK.TopKRows], id: Long) =>
-            batch.withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(out)
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode(graft.streaming.StreamingTopK.outputMode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val out = replay(spark, "graft-topk-replay", ReplayRocksDb)(
+        timeSlices(spark, orders, col("o_orderkey"), 4)) {
+      (landing, out, ckpt) =>
+        val stream = slices(spark, landing, StructType.fromDDL(
+            "o_orderkey LONG, o_custkey LONG, o_totalprice DOUBLE"))
+          .join(broadcast(segments), col("o_custkey") === col("c_custkey"))
+          .select(col("segment"),
+            round(col("o_totalprice") * 100).cast("long").as("cents"),
+            col("o_orderkey"))
+          .as[StreamingTopK.OrderRow]
+        Streams.stamped(StreamingTopK.topkPerSegment(stream), out, ckpt,
+          StreamingTopK.outputMode)(_.toDF())
     }
-    spark.read.schema(StructType.fromDDL(
-        "segment STRING, values ARRAY<BIGINT>, ids ARRAY<BIGINT>, " +
-          "batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("segment")
-      .agg(expr("max_by(struct(values, ids), batch_id)").as("s"))
+    Streams.latest(spark, out,
+        "segment STRING, values ARRAY<BIGINT>, ids ARRAY<BIGINT>", "segment")
       .select(col("segment"),
-        posexplode(arrays_zip(col("s.values"), col("s.ids"))))
+        posexplode(arrays_zip(col("values"), col("ids"))))
       .select(col("segment"), (col("pos") + 1).cast("int").as("rnk"),
         col("col.values").as("cents"), col("col.ids").as("o_orderkey"))
       .orderBy("segment", "rnk")
@@ -1060,27 +886,17 @@ object StreamReplayOps {
     * sink's at-least-once appends.
     */
   def classifierScoreReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-cs-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
     val static = docs.where(col("doc_id") % 5 =!= 0)
     val delta = docs.where(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"))
-    landTimeSlices(spark, delta.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingClassifierScore.scoreAvailableNow(
-        spark, landing, static, out, ckpt,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
+    val out = replay(spark, "graft-cs-replay")(
+        timeSlices(spark, delta, col("doc_id"), 3)) {
+      StreamingClassifierScore.scoreAvailableNow(spark, _, static, _, _,
+        DocText, maxFilesPerTrigger = Some(1))
     }
-    spark.read.schema(StructType.fromDDL(
-        "doc_id BIGINT, p4 BIGINT, pred_en BOOLEAN, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("doc_id")
-      .agg(expr("max_by(p4, batch_id)").as("p4"),
-        expr("max_by(pred_en, batch_id)").as("pred_en"))
+    Streams.latest(spark, out, "doc_id BIGINT, p4 BIGINT, pred_en BOOLEAN",
+        "doc_id")
       .orderBy("doc_id")
   }
 
@@ -1096,28 +912,17 @@ object StreamReplayOps {
     * doc_id keeps the read idempotent under the sink's appends.
     */
   def perplexityScoreReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-ppl-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
     val train = docs.where(col("doc_id") % 2 === 0)
     val delta = docs.where(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("text"))
-    landTimeSlices(spark, delta.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingPerplexityScore.scoreAvailableNow(
-        spark, landing, train, out, ckpt,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
+    val out = replay(spark, "graft-ppl-replay")(
+        timeSlices(spark, delta, col("doc_id"), 3)) {
+      StreamingPerplexityScore.scoreAvailableNow(spark, _, train, _, _,
+        DocText, maxFilesPerTrigger = Some(1))
     }
-    VocabModelOps.pplCensus(
-      spark.read.schema(StructType.fromDDL(
-          "doc_id BIGINT, ppl BIGINT, n BIGINT, batch_id BIGINT"))
-        .parquet(out)
-        .groupBy("doc_id")
-        .agg(expr("max_by(ppl, batch_id)").as("ppl"),
-          expr("max_by(n, batch_id)").as("n")))
+    VocabModelOps.pplCensus(Streams.latest(spark, out,
+      "doc_id BIGINT, ppl BIGINT, n BIGINT", "doc_id"))
   }
 
   /** q338 body: replay the WHOLE documents corpus in doc_id-ordered
@@ -1132,8 +937,6 @@ object StreamReplayOps {
     * max_by(·, batch_id) keeps the readback idempotent.
     */
   def budgetAdmissionReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-adm-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val budgets = docs
@@ -1141,23 +944,14 @@ object StreamReplayOps {
         | split(coalesce(text, ''), ' '), t -> t <> '')) AS BIGINT)"""
         .stripMargin).as("n"))
       .groupBy("lang").agg(expr("sum(n) div 2").as("budget"))
-    landTimeSlices(spark, docs.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingBudgetAdmission.admitAvailableNow(
-        spark, landing, budgets, out, ckpt,
-        StructType.fromDDL("doc_id BIGINT, lang STRING, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
+    val out = replay(spark, "graft-adm-replay")(
+        timeSlices(spark, docs, col("doc_id"), 3)) {
+      StreamingBudgetAdmission.admitAvailableNow(spark, _, budgets, _, _,
+        DocLangText, maxFilesPerTrigger = Some(1))
     }
-    spark.read.schema(StructType.fromDDL(
-        "doc_id BIGINT, lang STRING, n_toks BIGINT, admitted BOOLEAN, " +
-          "batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("doc_id")
-      .agg(expr("max_by(lang, batch_id)").as("lang"),
-        expr("max_by(n_toks, batch_id)").as("n_toks"),
-        expr("max_by(admitted, batch_id)").as("admitted"))
+    Streams.latest(spark, out,
+        "doc_id BIGINT, lang STRING, n_toks BIGINT, admitted BOOLEAN",
+        "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
@@ -1213,31 +1007,18 @@ object StreamReplayOps {
     * replays the same gate predicate and doc_id-ordered skip-fold.
     */
   def curationGateReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-gate-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
-    val budgets = graft.streaming.StreamingCurationGate.gateFrame(docs)
+    val budgets = StreamingCurationGate.gateFrame(docs)
       .where(!col("gated"))
       .groupBy("lang").agg(expr("sum(n_toks) div 2").as("budget"))
-    landTimeSlices(spark, docs.withColumn("slice_key", col("doc_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingCurationGate.gateAvailableNow(
-        spark, landing, budgets, out, ckpt,
-        StructType.fromDDL("doc_id BIGINT, lang STRING, text STRING"),
-        maxFilesPerTrigger = Some(1))
-        .awaitTermination()
+    val out = replay(spark, "graft-gate-replay")(
+        timeSlices(spark, docs, col("doc_id"), 3)) {
+      StreamingCurationGate.gateAvailableNow(spark, _, budgets, _, _,
+        DocLangText, maxFilesPerTrigger = Some(1))
     }
-    spark.read.schema(StructType.fromDDL(
-        "doc_id BIGINT, lang STRING, n_toks BIGINT, gated BOOLEAN, " +
-          "admitted BOOLEAN, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("doc_id")
-      .agg(expr("max_by(lang, batch_id)").as("lang"),
-        expr("max_by(n_toks, batch_id)").as("n_toks"),
-        expr("max_by(gated, batch_id)").as("gated"),
-        expr("max_by(admitted, batch_id)").as("admitted"))
+    Streams.latest(spark, out, "doc_id BIGINT, lang STRING, " +
+        "n_toks BIGINT, gated BOOLEAN, admitted BOOLEAN", "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("gated"), 1L).otherwise(0L)).as("n_gated"),
@@ -1308,25 +1089,17 @@ object StreamReplayOps {
     * the readback idempotent.
     */
   def annServeReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-ann-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val v = SimilarityOps.vectors(spark, dir)
     AnnIndexOps.buildResidualIndex(spark, v, "graft_annstream")
     val queries = SimilarityOps.queriesOf(v, 20)
-    landTimeSlices(spark, queries.withColumn("slice_key", col("q_id")),
-      nSlices = 3, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingAnnServe.serveAvailableNow(
-        spark, landing, "graft_annstream", out, ckpt,
+    val out = replay(spark, "graft-ann-replay")(
+        timeSlices(spark, queries, col("q_id"), 3)) {
+      StreamingAnnServe.serveAvailableNow(spark, _, "graft_annstream", _, _,
         StructType.fromDDL("q_id BIGINT, qv ARRAY<DOUBLE>"),
         maxFilesPerTrigger = Some(1))
-        .awaitTermination()
     }
-    spark.read.schema(StructType.fromDDL(
-        "q_id BIGINT, rnk INT, vec_id BIGINT, batch_id BIGINT"))
-      .parquet(out)
-      .groupBy("q_id", "rnk")
-      .agg(expr("max_by(vec_id, batch_id)").as("vec_id"))
+    Streams.latest(spark, out, "q_id BIGINT, rnk INT, vec_id BIGINT",
+        "q_id", "rnk")
       .orderBy("q_id", "rnk")
   }
 
@@ -1348,7 +1121,7 @@ object StreamReplayOps {
     val delta = v.where(col("vec_id") % 5 === 0)
     AnnIndexOps.buildResidualIndex(spark, baseSlice, "graft_annmaint")
     replayTier(spark, "graft-annm-replay", delta, "vec_id")(
-      graft.streaming.StreamingAnnMaintain.maintainAvailableNow(
+      StreamingAnnMaintain.maintainAvailableNow(
         spark, _, "graft_annmaint", _,
         StructType.fromDDL("vec_id BIGINT, label INT, v ARRAY<DOUBLE>"),
         maxFilesPerTrigger = Some(1)))
@@ -1371,7 +1144,7 @@ object StreamReplayOps {
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anntdstream")
     val dels = v.where(col("vec_id") % 11 === 0).select(col("vec_id"))
     replayTier(spark, "graft-anntd-replay", dels, "vec_id")(
-      graft.streaming.StreamingAnnTakedown.takedownAvailableNow(
+      StreamingAnnTakedown.takedownAvailableNow(
         spark, _, "graft_anntdstream", _,
         StructType.fromDDL("vec_id BIGINT"),
         maxFilesPerTrigger = Some(1)))
@@ -1402,9 +1175,8 @@ object StreamReplayOps {
       docs.where(col("doc_id") <= cut), "graft_cmstream")
     replayTier(spark, "graft-cm-replay", docs.where(col("doc_id") > cut),
         "doc_id")(
-      graft.streaming.StreamingCuratedMaintain.maintainAvailableNow(
-        spark, _, "graft_cmstream", _,
-        StructType.fromDDL("doc_id BIGINT, lang STRING, text STRING"),
+      StreamingCuratedMaintain.maintainAvailableNow(
+        spark, _, "graft_cmstream", _, DocLangText,
         maxFilesPerTrigger = Some(1)))
     CurationOps.curatedCensusOf(spark.table("graft_cmstream_curated"))
   }
@@ -1432,9 +1204,8 @@ object StreamReplayOps {
       train.where(col("doc_id") <= cut), "graft_lmstream")
     replayTier(spark, "graft-lm-replay", train.where(col("doc_id") > cut),
         "doc_id")(
-      graft.streaming.StreamingLmMaintain.maintainAvailableNow(
-        spark, _, "graft_lmstream", _,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
+      StreamingLmMaintain.maintainAvailableNow(
+        spark, _, "graft_lmstream", _, DocText,
         maxFilesPerTrigger = Some(1)))
     VocabModelOps.scoreFromStored(spark,
       docs.where(col("doc_id") % 2 === 1), "graft_lmstream")
@@ -1461,9 +1232,8 @@ object StreamReplayOps {
       docs.where(col("doc_id") <= cut), "graft_sistream")
     replayTier(spark, "graft-si-replay", docs.where(col("doc_id") > cut),
         "doc_id")(
-      graft.streaming.StreamingSearchIndexMaintain.maintainAvailableNow(
-        spark, _, "graft_sistream", _,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
+      StreamingSearchIndexMaintain.maintainAvailableNow(
+        spark, _, "graft_sistream", _, DocText,
         maxFilesPerTrigger = Some(1)))
     CorpusStatsOps.bm25FromStored(spark, CorpusStatsOps.Bm25Queries, 10,
       "graft_sistream")
@@ -1489,9 +1259,8 @@ object StreamReplayOps {
       docs.where(col("doc_id") <= cut), "graft_clmstream")
     replayTier(spark, "graft-clm-replay", docs.where(col("doc_id") > cut),
         "doc_id")(
-      graft.streaming.StreamingClusterMaintain.maintainAvailableNow(
-        spark, _, "graft_clmstream", _,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
+      StreamingClusterMaintain.maintainAvailableNow(
+        spark, _, "graft_clmstream", _, DocText,
         maxFilesPerTrigger = Some(1)))
     spark.table("graft_clmstream_clusters")
       .select(col("doc_id"), col("cluster_id"), col("is_dup"))
@@ -1519,7 +1288,7 @@ object StreamReplayOps {
       docs.where(col("doc_id") <= cut), "graft_mmstream")
     replayTier(spark, "graft-mm-replay", docs.where(col("doc_id") > cut),
         "doc_id")(
-      graft.streaming.StreamingMediaMaintain.maintainAvailableNow(
+      StreamingMediaMaintain.maintainAvailableNow(
         spark, _, "graft_mmstream", _,
         StructType.fromDDL("doc_id BIGINT"),
         maxFilesPerTrigger = Some(1)))
@@ -1547,7 +1316,7 @@ object StreamReplayOps {
     CorpusStatsOps.searchIndexMaterialize(spark, docs, "graft_sitdstream")
     val dels = docs.where(col("doc_id") % 13 === 0).select(col("doc_id"))
     replayTier(spark, "graft-sitd-replay", dels, "doc_id")(
-      graft.streaming.StreamingSearchIndexTakedown.takedownAvailableNow(
+      StreamingSearchIndexTakedown.takedownAvailableNow(
         spark, _, "graft_sitdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
         maxFilesPerTrigger = Some(1)))
@@ -1577,7 +1346,7 @@ object StreamReplayOps {
       "graft_cltdstream")
     val dels = docs.where(col("doc_id") % 13 === 0).select(col("doc_id"))
     replayTier(spark, "graft-cltd-replay", dels, "doc_id")(
-      graft.streaming.StreamingClusterTakedown.takedownAvailableNow(
+      StreamingClusterTakedown.takedownAvailableNow(
         spark, _, "graft_cltdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
         maxFilesPerTrigger = Some(1)))
@@ -1613,7 +1382,7 @@ object StreamReplayOps {
     val dels = docs
       .where(col("doc_id") % 13 === 0 || col("doc_id") % 97 === 7)
     replayTier(spark, "graft-mtd-replay", dels, "doc_id")(
-      graft.streaming.StreamingMediaTakedown.takedownAvailableNow(
+      StreamingMediaTakedown.takedownAvailableNow(
         spark, _, "graft_mtdstream", _,
         StructType.fromDDL("doc_id BIGINT"),
         maxFilesPerTrigger = Some(1)))
@@ -1643,13 +1412,12 @@ object StreamReplayOps {
       .select(col("doc_id"), col("text"))
     val train = docs.where(col("doc_id") % 2 === 0)
     VocabModelOps.lmMaterialize(spark, train, "graft_lmustream")
-    graft.streaming.StreamingLmUnlearn.resetProcessed(spark,
+    StreamingLmUnlearn.resetProcessed(spark,
       "graft_lmustream")
     replayTier(spark, "graft-lmu-replay",
         train.where(col("doc_id") % 13 === 0), "doc_id")(
-      graft.streaming.StreamingLmUnlearn.unlearnAvailableNow(
-        spark, _, "graft_lmustream", _,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
+      StreamingLmUnlearn.unlearnAvailableNow(
+        spark, _, "graft_lmustream", _, DocText,
         maxFilesPerTrigger = Some(1)))
     VocabModelOps.scoreFromStored(spark,
       docs.where(col("doc_id") % 2 === 1 && col("doc_id") % 13 =!= 0),
@@ -1691,7 +1459,7 @@ object StreamReplayOps {
           .as("v"))
     AnnIndexOps.buildResidualIndex(spark, v, "graft_anncs_m")
     replayTier(spark, "graft-anncs-replay", shifted, "vec_id")(
-      graft.streaming.StreamingAnnMaintain.maintainAvailableNow(
+      StreamingAnnMaintain.maintainAvailableNow(
         spark, _, "graft_anncs_m", _,
         StructType.fromDDL("vec_id BIGINT, label INT, v ARRAY<DOUBLE>"),
         maxFilesPerTrigger = Some(1), censusSplit = true))
@@ -1741,17 +1509,11 @@ object StreamReplayOps {
     * would fail the golden's row count).
     */
   def minhashDedupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val base = replayScratchBase("graft-smh-replay")
-    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
-    landTimeSlices(spark, docs.withColumn("slice_key", col("doc_id")),
-      nSlices = 4, landing, None)
-    withReplayPartitions(spark) {
-      graft.streaming.StreamingMinHashDedup.dedupAvailableNow(
-        spark, landing, out, ckpt,
-        StructType.fromDDL("doc_id BIGINT, text STRING"),
+    val out = replay(spark, "graft-smh-replay")(
+        timeSlices(spark, docs, col("doc_id"), 4)) {
+      StreamingMinHashDedup.dedupAvailableNow(spark, _, _, _, DocText,
         maxFilesPerTrigger = Some(1))
-        .awaitTermination()
     }
     val streamed = spark.read.schema(StructType.fromDDL(
         "doc_id BIGINT, canonical_id BIGINT, batch_id BIGINT"))

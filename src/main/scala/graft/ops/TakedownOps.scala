@@ -824,8 +824,10 @@ object TakedownOps {
       .localCheckpoint(true))
     val keyedT = spark.table(tn.keyed)
     val sigsT = spark.table(tn.sigs)
-    val affKeys = broadcast(keyedT.join(del, Seq("doc_id"))
-      .select(col("media_key")).distinct().localCheckpoint(true))
+    // hinted only where it is the build side: it is also the left side
+    // of the dead-key anti join, which cannot build left
+    val affKeys = keyedT.join(del, Seq("doc_id"))
+      .select(col("media_key")).distinct().localCheckpoint(true)
     // the surviving ownership view — a lazy anti-join the downstream
     // derivations read; only the affected buckets of it are ever
     // rewritten (VERDICT r16 #5)
@@ -833,12 +835,12 @@ object TakedownOps {
     // fingerprints with zero surviving owners leave. The existence probe
     // scans only ownership rows of the affected keys (broadcast semi)
     val deadKeys = broadcast(affKeys.join(
-        survKeyed.join(affKeys, Seq("media_key"), "left_semi")
+        survKeyed.join(broadcast(affKeys), Seq("media_key"), "left_semi")
           .select(col("media_key")).distinct(),
         Seq("media_key"), "left_anti")
       .localCheckpoint(true))
     // cluster groups containing a deleted doc: recompute over survivors
-    val affSigs = broadcast(sigsT.join(affKeys, Seq("media_key"))
+    val affSigs = broadcast(sigsT.join(broadcast(affKeys), Seq("media_key"))
       .select(sigCols.map(col): _*).distinct().localCheckpoint(true))
     // the sig rows of the affected groups; mediaClusters joins keyed ×
     // sigs on media_key itself, so the keyed side passes ownership rows

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.AnnIndexOps
@@ -34,21 +33,10 @@ object StreamingAnnServe {
       topK: Int = 5,
       probes: Int = 8,
       shortlist: Int = 100,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        AnnIndexOps.serveTopK(spark, batch, indexPrefix,
-            topK = topK, probes = probes, shortlist = shortlist)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    Streams.stamped(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      outDir, checkpointDir)(
+      AnnIndexOps.serveTopK(spark, _, indexPrefix,
+        topK = topK, probes = probes, shortlist = shortlist))
 }

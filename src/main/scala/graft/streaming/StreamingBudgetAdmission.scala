@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** STATEFUL token-budget admission control — the 21st streaming
@@ -58,7 +58,7 @@ object StreamingBudgetAdmission {
       }
   }
 
-  val outputMode: String = "update"
+  val outputMode: OutputMode = OutputMode.Update()
 
   /** `budgets` is the (lang, budget) quota relation — computed in batch
     * from the corpus (or policy), broadcast into every micro-batch.
@@ -74,27 +74,14 @@ object StreamingBudgetAdmission {
     import spark.implicits._
     val b = budgets.cache()
     b.count() // materialize once, not per micro-batch
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val docs = reader.parquet(landingDir)
+    val docs = Streams.landed(spark, landingDir, schema, maxFilesPerTrigger)
       .select(col("doc_id"), col("lang"),
         expr("""CAST(size(filter(split(coalesce(text, ''), ' '),
           | t -> t <> '')) AS BIGINT)""".stripMargin).as("n_toks"))
       .join(broadcast(b), Seq("lang"))
       .select(col("lang"), col("doc_id"), col("n_toks"), col("budget"))
       .as[DocTokens]
-    StreamCacheCleanup.onTermination(
-      foldAdmissions(docs)
-        .writeStream
-        .foreachBatch { (batch: Dataset[Admission], batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      b)
+    Streams.stamped(foldAdmissions(docs), outDir, checkpointDir, outputMode,
+      cached = Seq(b))(_.toDF())
   }
 }

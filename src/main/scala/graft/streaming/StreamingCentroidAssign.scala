@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.EmbedStatsOps
@@ -46,22 +46,10 @@ object StreamingCentroidAssign {
       EmbedStatsOps.quantElems(staticCorpus)
         .join(staticCorpus.select(col("vec_id"), col("label")), Seq("vec_id")))
       .cache()
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    StreamCacheCleanup.onTermination(
-      reader
-        .parquet(landingDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          EmbedStatsOps.assignToCentroids(
-              EmbedStatsOps.quantElems(batch), centN)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      centN)
+    Streams.stamped(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      outDir, checkpointDir, cached = Seq(centN)) { batch =>
+      EmbedStatsOps.assignToCentroids(EmbedStatsOps.quantElems(batch), centN)
+    }
   }
 }

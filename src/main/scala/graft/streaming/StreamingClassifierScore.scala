@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.VocabModelOps
@@ -45,21 +44,9 @@ object StreamingClassifierScore {
     val weights = VocabModelOps.tokenWeights(staticCorpus).cache()
     val trained = VocabModelOps.trainedWeights(staticCorpus).cache()
     weights.count(); trained.count() // train once, not per micro-batch
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    StreamCacheCleanup.onTermination(
-      reader
-        .parquet(landingDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          VocabModelOps.inferP4(batch, weights, trained)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      weights, trained)
+    Streams.stamped(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      outDir, checkpointDir, cached = Seq(weights, trained))(
+      VocabModelOps.inferP4(_, weights, trained))
   }
 }

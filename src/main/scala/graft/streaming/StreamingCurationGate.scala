@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** STATEFUL curation-gate pipeline — the 22nd streaming component, and
@@ -77,7 +77,7 @@ object StreamingCurationGate {
       }
   }
 
-  val outputMode: String = "update"
+  val outputMode: OutputMode = OutputMode.Update()
 
   def gateAvailableNow(
       spark: SparkSession,
@@ -90,25 +90,13 @@ object StreamingCurationGate {
     import spark.implicits._
     val b = budgets.cache()
     b.count() // materialize once, not per micro-batch
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val docs = gateFrame(reader.parquet(landingDir))
+    val docs =
+      gateFrame(Streams.landed(spark, landingDir, schema, maxFilesPerTrigger))
       .join(broadcast(b), Seq("lang"))
       .select(col("lang"), col("doc_id"), col("n_toks"), col("gated"),
         col("budget"))
       .as[GateDoc]
-    StreamCacheCleanup.onTermination(
-      foldGate(docs)
-        .writeStream
-        .foreachBatch { (batch: Dataset[GateVerdict], batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(outputMode)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      b)
+    Streams.stamped(foldGate(docs), outDir, checkpointDir, outputMode,
+      cached = Seq(b))(_.toDF())
   }
 }

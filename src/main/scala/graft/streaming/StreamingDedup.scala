@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming exact dedup for a continuously-landing corpus: the streaming
@@ -27,14 +27,9 @@ object StreamingDedup {
       tsCol: String,
       delay: String,
       keys: Seq[String]): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(landingDir)
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keys)
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
+    Streams.toParquet(
+      Streams.landed(spark, landingDir, schema)
+        .withWatermark(tsCol, delay)
+        .dropDuplicatesWithinWatermark(keys),
+      outDir, checkpointDir)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.DedupOps
@@ -41,24 +40,9 @@ object StreamingIncrementalDedup {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val buckets = DedupOps.bucketTable(existing).cache()
-    val reader = spark.readStream.schema(schema)
-    // Trigger.AvailableNow honors maxFilesPerTrigger, so a replay can
-    // force several micro-batches (each joining the shared bucket
-    // relation independently) instead of one catch-all batch
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    StreamCacheCleanup.onTermination(
-      reader
-        .parquet(landingDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          DedupOps.incrementalAssignAgainst(buckets, batch)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      buckets)
+    Streams.stamped(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      outDir, checkpointDir, cached = Seq(buckets))(
+      DedupOps.incrementalAssignAgainst(buckets, _))
   }
 }

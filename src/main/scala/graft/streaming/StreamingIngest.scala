@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.etl.Pipeline
 import graft.model.Sales
@@ -20,17 +20,9 @@ object StreamingIngest {
     * the streaming analogue of `Pipeline.silverIncrement`.
     */
   def silverAvailableNow(spark: SparkSession, landingDir: String,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    val bronze = spark.readStream
-      .schema(Sales.bronzeSchema)
-      .parquet(landingDir)
-    Pipeline.silverTransform(bronze)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      outDir: String, checkpointDir: String): StreamingQuery =
+    Streams.toParquet(
+      Pipeline.silverTransform(
+        Streams.landed(spark, landingDir, Sales.bronzeSchema)),
+      outDir, checkpointDir)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.DedupOps
@@ -61,7 +61,7 @@ object StreamingMinHashDedup {
       }
   }
 
-  val outputMode: String = "update"
+  val outputMode: OutputMode = OutputMode.Update()
 
   def dedupAvailableNow(
       spark: SparkSession,
@@ -73,29 +73,17 @@ object StreamingMinHashDedup {
       rowsPerBand: Int = 8,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import spark.implicits._
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val docs = reader.parquet(landingDir)
+    val docs = Streams.landed(spark, landingDir, schema, maxFilesPerTrigger)
     // the banding is row-local (signature HOFs + explode), so it runs
     // unchanged on the streaming frame — one family, both tiers
     val buckets = DedupOps.minhashBuckets(docs, bands, rowsPerBand)
       .select(col("band").cast("int").as("band"), col("bhash"),
         col("doc_id"))
       .as[BucketRow]
-    foldBuckets(buckets)
-      .writeStream
-      .foreachBatch { (batch: Dataset[BucketMin], batchId: Long) =>
-        // a doc's buckets all live in its own micro-batch, so its 1-hop
-        // canonical closes here: min over its emitted bucket minima
-        batch.groupBy("doc_id")
-          .agg(min(col("bmin")).as("canonical_id"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    // a doc's buckets all live in its own micro-batch, so its 1-hop
+    // canonical closes there: min over its emitted bucket minima
+    Streams.stamped(foldBuckets(buckets), outDir, checkpointDir,
+        outputMode)(
+      _.groupBy("doc_id").agg(min(col("bmin")).as("canonical_id")))
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.VocabModelOps
@@ -41,21 +40,9 @@ object StreamingPerplexityScore {
     val (c12r, c1r, vvr) = VocabModelOps.bigramModel(staticTrain)
     val c12 = c12r.cache(); val c1 = c1r.cache(); val vv = vvr.cache()
     c12.count(); c1.count(); vv.count() // train once, not per micro-batch
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    StreamCacheCleanup.onTermination(
-      reader
-        .parquet(landingDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          VocabModelOps.scoreBigramsPerDoc(batch, c12, c1, vv)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start(),
-      c12, c1, vv)
+    Streams.stamped(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      outDir, checkpointDir, cached = Seq(c12, c1, vv))(
+      VocabModelOps.scoreBigramsPerDoc(_, c12, c1, vv))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Watermarked SESSION-window aggregation — the declarative streaming
@@ -32,31 +32,20 @@ object StreamingSessionWindow {
       tsCol: String = "ts",
       delay: String = "30 minutes",
       gap: String = "30 minutes",
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    // Trigger.AvailableNow honors maxFilesPerTrigger, so a replay can be
-    // forced through several micro-batches (exercising cross-batch
-    // session merge + watermark eviction) instead of one catch-all batch
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .withWatermark(tsCol, delay)
-      .groupBy(col("user_id"), session_window(col(tsCol), gap))
-      // DECIMAL(18,6) matches EventOps.sessions (the q34 batch body)
-      // exactly, so a replay over a closed corpus is graded by the SAME
-      // oracle arithmetic as the batch sessionizer
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value").cast(DecimalType(18, 6))), 2).cast("double")
-          .as("sum_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("sum_value"))
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    Streams.toParquet(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger)
+        .withWatermark(tsCol, delay)
+        .groupBy(col("user_id"), session_window(col(tsCol), gap))
+        // DECIMAL(18,6) matches EventOps.sessions (the q34 batch body)
+        // exactly, so a replay over a closed corpus is graded by the SAME
+        // oracle arithmetic as the batch sessionizer
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value").cast(DecimalType(18, 6))), 2).cast("double")
+            .as("sum_value"))
+        .select(col("user_id"),
+          col("session_window.start").as("session_start"),
+          col("session_window.end").as("session_end"),
+          col("n_events"), col("sum_value")),
+      outDir, checkpointDir)
 }

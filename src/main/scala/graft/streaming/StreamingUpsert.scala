@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Continuous merge-upsert into a SERVING table via `foreachBatch` — the
@@ -88,18 +88,8 @@ object StreamingUpsert {
       checkpointDir: String,
       schema: StructType,
       nBuckets: Int = 16,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    // Trigger.AvailableNow honors maxFilesPerTrigger, so a replay can be
-    // forced through several micro-batches (exercising cross-batch
-    // merge/tombstone ordering) instead of one catch-all batch
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(upsertBatch(tableDir, nBuckets) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    Streams.foreachBatch(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      checkpointDir)(upsertBatch(tableDir, nBuckets))
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Watermarked tumbling-window aggregation — the canonical Structured
@@ -35,32 +35,21 @@ object StreamingWindowedAgg {
       delay: String = "30 minutes",
       width: String = "1 hour",
       slide: String = null,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    // Trigger.AvailableNow honors maxFilesPerTrigger: a replay can force
-    // several micro-batches so cross-batch window state + watermark
-    // eviction are actually exercised
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .withWatermark(tsCol, delay)
-      // slide == null -> tumbling; a shorter slide gives HOPPING windows
-      // (q160's batch mode under the same watermark/append contract —
-      // each of the width/slide overlapping windows finalizes and emits
-      // independently once the watermark passes ITS end)
-      .groupBy(window(col(tsCol), width,
-        if (slide == null) width else slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value").cast(DecimalType(18, 4))), 2).cast("double")
-          .as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n_events"), col("sum_value"))
-      .writeStream
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start(outDir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    Streams.toParquet(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger)
+        .withWatermark(tsCol, delay)
+        // slide == null -> tumbling; a shorter slide gives HOPPING windows
+        // (q160's batch mode under the same watermark/append contract —
+        // each of the width/slide overlapping windows finalizes and emits
+        // independently once the watermark passes ITS end)
+        .groupBy(window(col(tsCol), width,
+          if (slide == null) width else slide), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value").cast(DecimalType(18, 4))), 2).cast("double")
+            .as("sum_value"))
+        .select(col("window.start").as("window_start"),
+          col("window.end").as("window_end"),
+          col("event_type"), col("n_events"), col("sum_value")),
+      outDir, checkpointDir)
 }

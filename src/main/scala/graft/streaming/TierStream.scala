@@ -2,15 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.util.Tables
 
-/** The one skeleton of every streamed maintain, takedown and unlearn
-  * tier: parquet files landed under `landingDir` are read as a stream,
-  * drained once (`AvailableNow`), and every micro-batch runs the tier's
-  * `gate` and then, when the gate kept any row, its `apply`.
+/** The skeleton of every streamed maintain, takedown and unlearn tier,
+  * on [[Streams]]: parquet files landed under `landingDir` are read as a
+  * stream, drained once (`AvailableNow`), and every micro-batch runs the
+  * tier's `gate` and then, when the gate kept any row, its `apply`.
   *
   * The gate is the only plan on the stream's batch, which belongs to
   * the stream's cloned session. It drops what an earlier delivery
@@ -31,24 +31,17 @@ object TierStream {
       schema: StructType,
       maxFilesPerTrigger: Option[Int])(
       gate: DataFrame => (DataFrame, Long))(
-      apply: DataFrame => Unit): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (rows, n) = gate(batch)
-        if (n > 0) {
-          require(rows.sparkSession eq spark,
-            "a tier gate must return its rows re-rooted on the caller's session")
-          apply(rows)
-        }
+      apply: DataFrame => Unit): StreamingQuery =
+    Streams.foreachBatch(
+      Streams.landed(spark, landingDir, schema, maxFilesPerTrigger),
+      checkpointDir) { (batch, _) =>
+      val (rows, n) = gate(batch)
+      if (n > 0) {
+        require(rows.sparkSession eq spark,
+          "a tier gate must return its rows re-rooted on the caller's session")
+        apply(rows)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** The gate of the five doc tiers, whose exactly-once rule is one
     * doc_id watermark: the batch rows above the historical max doc_id
